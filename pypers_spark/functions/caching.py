@@ -43,3 +43,30 @@ def tracked_persist(df: DataFrame, key: str) -> DataFrame:
     df = df.persist(StorageLevel.MEMORY_AND_DISK)
     _LIVE[key] = df
     return df
+
+
+def cached_relation(df: DataFrame):
+    """The cache manager's ``InMemoryRelation`` serving ``df``'s plan, or
+    None when the plan is not cached."""
+    cm = df.sparkSession._jsparkSession.sharedState().cacheManager()
+    hit = cm.lookupCachedData(df._jdf)
+    return hit.get().cachedRepresentation() if hit.isDefined() else None
+
+
+def reads_cache(df: DataFrame, relation) -> bool:
+    """Whether the cache manager answers part of ``df``'s plan from the
+    cached ``relation`` (as returned by ``cached_relation``), judged on
+    the current cache state, not on a plan ``df`` may have already
+    planned."""
+    cm = df.sparkSession._jsparkSession.sharedState().cacheManager()
+    plan = cm.useCachedData(df._jdf.queryExecution().normalized())
+    builder = relation.cacheBuilder()
+    leaves = plan.collectLeaves().iterator()
+    while leaves.hasNext():
+        leaf = leaves.next()
+        if (
+            leaf.getClass().getSimpleName() == "InMemoryRelation"
+            and leaf.cacheBuilder().equals(builder)
+        ):
+            return True
+    return False

@@ -50,6 +50,7 @@ import tempfile
 from pyspark.sql import DataFrame
 
 from pypers_spark.functions.caching import tracked_persist
+from pypers_spark.sources.io import read_parquet
 
 _OPEN: dict = {}  # (key, digest) -> checkpoint-backed DataFrame
 
@@ -213,6 +214,6 @@ def table_checkpoint(df: DataFrame, key: str) -> DataFrame:
     # parquet artifact serves cross-process reuse, the persist serves
     # the 2-3 consumers inside one query plan without re-decoding the
     # parquet each time.
-    out = tracked_persist(spark.read.parquet(path), key)
+    out = tracked_persist(read_parquet(spark, path), key)
     _OPEN[(key, digest)] = out
     return out

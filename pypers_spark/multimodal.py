@@ -116,12 +116,11 @@ def _materialize_stats(df: DataFrame) -> DataFrame:
 
     The exchange materializes the Python codec stage's output once
     (r11, guide §2.3/§8): without it, any plan with two consumers of
-    the decode — a readout branch, or just the range-sampling job that
-    every final ``orderBy`` launches — re-runs the WHOLE codec stage
-    per consumer (measured: mm_png_meta's 500-image PNG decode executed
-    twice per query, 19.8 + 14.4 executor-cpu-s). Only skinny stats
-    rows cross the exchange, never payloads; downstream consumers and
-    the sort sampler read the materialized shuffle blocks instead.
+    the decode (a readout branch, a self-join or union) re-runs the
+    WHOLE codec stage per consumer (measured: mm_png_meta's 500-image
+    PNG decode executed twice per query, 19.8 + 14.4 executor-cpu-s).
+    Only skinny stats rows cross the exchange, never payloads;
+    downstream consumers read the materialized shuffle blocks instead.
 
     No explicit partition count: REPARTITION_BY_COL lets AQE coalesce
     the (tiny) stats exchange — a pinned count held 32 post-exchange
@@ -1223,10 +1222,9 @@ def decode_audio(media: DataFrame) -> DataFrame:
             )
 
     # NOT _materialize_stats-wrapped (r11): the only consumer
-    # (mm_audio_meta) aggregates to a 12-group key immediately — that
-    # aggregation's own exchange already decouples the final sort's
-    # sampling job from the decode, so an extra exchange here is pure
-    # cost (measured +0.2s solo at sf0.1).
+    # (mm_audio_meta) aggregates to a 12-group key immediately, reading
+    # the decode once, so an extra exchange here is pure cost (measured
+    # +0.2s solo at sf0.1).
     return media.mapInPandas(decode_batches, schema=AUDIO_META_SCHEMA)
 
 
@@ -1551,9 +1549,9 @@ def frame_lumas(
             )
 
     # NOT _materialize_stats-wrapped (r11): the only consumer
-    # (mm_scene_cut) runs a per-media window over the luma rows whose
-    # own exchange decouples the final sort's sampler from the decode;
-    # an extra exchange here measured +0.1s solo at sf0.1.
+    # (mm_scene_cut) runs a per-media window over the luma rows, which
+    # reads the decode once; an extra exchange here measured +0.1s solo
+    # at sf0.1.
     return media.mapInPandas(luma_batches, schema=FRAME_LUMA_SCHEMA)
 
 

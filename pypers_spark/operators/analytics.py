@@ -138,7 +138,6 @@ def ev_survival_km(t: dict[str, DataFrame]) -> DataFrame:
             F.col("d").alias("n_deaths"),
             rnd(F.exp(F.col("qsum") / F.lit(1e9)), 6).alias("survival"),
         )
-        .orderBy("duration_h")
     )
 
 
@@ -239,7 +238,7 @@ def ev_auc_score(t: dict[str, DataFrame]) -> DataFrame:
             ),
             6,
         ).alias("auc"),
-    ).orderBy("event_type")
+    )
 
 
 ORACLE_AUC_SCORE = f"""
@@ -310,7 +309,6 @@ def ev_activity_gini(t: dict[str, DataFrame]) -> DataFrame:
                 6,
             ).alias("gini"),
         )
-        .orderBy("decile")
     )
 
 
@@ -455,7 +453,6 @@ def ev_changepoint(t: dict[str, DataFrame]) -> DataFrame:
             rnd(F.col("sr") / F.col("nr"), 4).alias("mean_after"),
             (F.col("qscore") / F.lit(1e6)).alias("score"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -525,7 +522,6 @@ def ev_stickiness(t: dict[str, DataFrame]) -> DataFrame:
                 6,
             ).alias("stickiness"),
         )
-        .orderBy("week")
     )
 
 
@@ -577,7 +573,6 @@ def sk_bitmap_distinct(t: dict[str, DataFrame]) -> DataFrame:
             F.sum(F.bit_count("bm")).alias("n_users"),
             F.count("*").alias("n_words"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -638,7 +633,6 @@ def op_largest_remainder(t: dict[str, DataFrame]) -> DataFrame:
                 "quota"
             ),
         )
-        .orderBy(F.desc("quota"), "source")
     )
 
 
@@ -696,7 +690,6 @@ def txt_token_entropy(t: dict[str, DataFrame]) -> DataFrame:
                 4,
             ).alias("entropy"),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -764,7 +757,6 @@ def op_scd2_build(t: dict[str, DataFrame]) -> DataFrame:
             F.row_number().over(w2).alias("version"),
         )
         .withColumn("is_current", F.col("valid_to").isNull())
-        .orderBy("user_id", "version")
     )
 
 
@@ -838,7 +830,6 @@ def op_scd2_lookup(t: dict[str, DataFrame]) -> DataFrame:
             F.count_distinct("d_user").alias("n_users"),
             F.count(F.when(F.col("is_current"), 1)).alias("n_on_current"),
         )
-        .orderBy("tier")
     )
 
 
@@ -930,7 +921,6 @@ def ev_ltv_cohort(t: dict[str, DataFrame]) -> DataFrame:
                 "ltv_per_user"
             ),
         )
-        .orderBy("cohort_week", "offset")
     )
 
 
@@ -1016,9 +1006,10 @@ def pipe_eval(t: dict[str, DataFrame]) -> DataFrame:
 
         def process(self, pipeline, config, status=None, **inputs):
             from pypers_spark.session import current_session
+            from pypers_spark.sources.io import read_parquet
 
             spark = current_session()
-            df = spark.read.parquet(f'{config["sf_dir"]}/documents.parquet')
+            df = read_parquet(spark, f'{config["sf_dir"]}/documents.parquet')
             n = int(spark.conf.get("spark.sql.shuffle.partitions"))
             return {"docs": df.repartition(n, F.col("doc_id"))}
 
@@ -1063,7 +1054,6 @@ def pipe_eval(t: dict[str, DataFrame]) -> DataFrame:
                 "avg_entropy"
             ),
         )
-        .orderBy("source")
     )
 
 
@@ -1150,7 +1140,7 @@ def ev_diff_in_diff(t: dict[str, DataFrame]) -> DataFrame:
         rnd(
             (mean("t_post") - mean("t_pre")) - (mean("c_post") - mean("c_pre")), 4
         ).alias("did"),
-    ).orderBy("event_type")
+    )
 
 
 def _duck_did_cell(tr: str, po: str, name: str) -> str:

@@ -27,9 +27,10 @@ class IngestDocuments(Stage):
 
     def process(self, pipeline, config, status=None, **inputs):
         from pypers_spark.session import current_session
+        from pypers_spark.sources.io import read_parquet
 
         spark = current_session()
-        df = spark.read.parquet(f'{config["sf_dir"]}/documents.parquet')
+        df = read_parquet(spark, f'{config["sf_dir"]}/documents.parquet')
         n = int(spark.conf.get("spark.sql.shuffle.partitions"))
         return {"docs": df.repartition(n, F.col("doc_id"))}
 
@@ -120,7 +121,6 @@ def pipe_curation(t) -> "DataFrame":  # noqa: F821
             "total_tokens",
             rnd(F.col("avg_quality"), 4).alias("avg_quality"),
         )
-        .orderBy("lang")
     )
 
 
@@ -180,6 +180,10 @@ ORDER BY lang
 """
 
 
+# RepetitionFilter's whitespace token count, handed to TokenStats.
+RF_N_TOKENS = "_rf_n_tokens"
+
+
 class RepetitionFilter(Stage):
     """Drop repetitive documents (Gopher-style gates): duplicate-2-gram
     fraction and top-token fraction thresholds over the token array —
@@ -229,7 +233,10 @@ class RepetitionFilter(Stage):
         # lambdafunction). zip_with's lambda references its ARGUMENTS;
         # tokenize is evaluated a constant ~5x per row (slice/size
         # args), not per element. slice(tk, 2, size-1) is [] for
-        # single-token docs, so no emptiness guard is needed.
+        # single-token docs, so no emptiness guard is needed. The
+        # lengths rely on tokenize_ws never returning an empty array
+        # (split of "" is [""]): size-1 >= 0. A tokenizer that dropped
+        # empty tokens would make the length -1 and slice would throw.
         pairs_arr = F.zip_with(
             F.slice(tk, 1, F.size(tk) - 1),
             F.slice(tk, 2, F.size(tk) - 1),
@@ -279,10 +286,12 @@ class RepetitionFilter(Stage):
             ).otherwise(F.lit(0.0)).alias("dup_2gram_frac"),
             (F.col("top_cnt") / F.col("n_tokens")).alias("top_token_frac"),
             # Carried through so TokenStats never re-tokenizes the
-            # surviving text (r12, guide §2.1): n_tokens is the count of
-            # this doc's token rows = size(tokenize_ws(text)) exactly,
-            # and every gated row has a metrics row by construction.
-            F.col("n_tokens").cast("int").alias("n_tokens"),
+            # surviving text (r12, guide §2.1): the count of this doc's
+            # token rows = size(tokenize_ws(text)) exactly, and every
+            # gated row has a metrics row by construction. The name is
+            # namespaced so a source column called n_tokens is never
+            # mistaken for it.
+            F.col("n_tokens").cast("int").alias(RF_N_TOKENS),
         )
         gated = filtered.join(metrics, "doc_id").filter(
             (F.col("dup_2gram_frac") <= max_dup2) & (F.col("top_token_frac") <= max_top)
@@ -303,10 +312,8 @@ class TokenStats(Stage):
         # when RepetitionFilter ran (one fewer full tokenize pass over
         # the survivors — guide §2.1); fall back to tokenizing when the
         # pipeline is composed without it.
-        if "n_tokens" in gated.columns:
-            curated = gated.withColumn("n_tokens_ws", F.col("n_tokens")).drop(
-                "n_tokens"
-            )
+        if RF_N_TOKENS in gated.columns:
+            curated = gated.withColumnRenamed(RF_N_TOKENS, "n_tokens_ws")
         else:
             curated = gated.withColumn(
                 "n_tokens_ws", F.size(tokenize_ws(F.col("text")))

@@ -31,7 +31,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from pypers_spark.functions.barrier import sort_barrier
 from pypers_spark.functions.hashing import duck_md5_int64, md5_int64
 from pypers_spark.functions.rounding import dsum, duck_dsum, duck_rnd, rnd
 from pypers_spark.functions.text import (
@@ -113,21 +112,12 @@ def txt_winnowing(t: dict[str, DataFrame]) -> DataFrame:
         F.min("h").over(w_min).alias("wmin"),
         F.count("*").over(w_min).alias("wcnt"),
     ).filter(F.col("wcnt") == WINNOW_W)
-    # r11: materialize the doc-cardinality readout into a hash exchange
-    # BEFORE the global sort — without a boundary here the range-sort's
-    # SAMPLING job re-executed the whole fingerprint chain (measured
-    # 44.7 executor-cpu-s for the sample vs 17.4 for the real pass).
-    # The earlier ``repartition(n, doc_id)`` fix was ELIDED by the
-    # optimizer (the chain already carries hash(doc_id) partitioning),
-    # silently re-introducing the double run (re-measured 19.9 + 9.3
-    # cpu-s at tip); sort_barrier's xxhash64 key survives elision.
-    out = (
+    return (
         full.select("doc_id", "wmin")
         .distinct()
         .groupBy("doc_id")
         .agg(F.count("*").alias("n_fingerprints"))
     )
-    return sort_barrier(out, "doc_id").orderBy("doc_id")
 
 
 ORACLE_WINNOWING = f"""
@@ -227,7 +217,6 @@ def dd_dup_spans(t: dict[str, DataFrame]) -> DataFrame:
             F.count("*").alias("n_dup_grams"),
         )
         .select("doc_id", "start_tok", "end_tok", "n_dup_grams")
-        .orderBy("doc_id", "start_tok")
     )
 
 
@@ -296,7 +285,6 @@ def txt_char_diversity(t: dict[str, DataFrame]) -> DataFrame:
                 6,
             ).alias("simpson"),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -354,7 +342,7 @@ def txt_zipf_head(t: dict[str, DataFrame]) -> DataFrame:
             / F.max("freq").over(wall).cast("double"),
             6,
         ).alias("zipf_product"),
-    ).orderBy("rank")
+    )
 
 
 ORACLE_ZIPF_HEAD = f"""
@@ -490,7 +478,6 @@ def op_stratified_sample(t: dict[str, DataFrame]) -> DataFrame:
     return (
         docs.select("source", "doc_id", F.row_number().over(w).alias("draw"))
         .filter(F.col("draw") <= STRATUM_TARGET)
-        .orderBy("source", "draw")
     )
 
 
@@ -548,7 +535,7 @@ def op_corr_exact(t: dict[str, DataFrame]) -> DataFrame:
         "n",
         rnd(cov_n / F.sqrt(var_x * var_y), 6).alias("corr_qty_price"),
         rnd(cov_n / var_x, 6).alias("slope_price_per_qty"),
-    ).orderBy("l_returnflag")
+    )
 
 
 ORACLE_CORR_EXACT = f"""
@@ -614,7 +601,6 @@ def ann_kmeans_assign(t: dict[str, DataFrame]) -> DataFrame:
             F.count("*").alias("n_assigned"),
             rnd(dsum(F.col("d2")) / F.count("*"), 4).alias("avg_d2"),
         )
-        .orderBy("cid")
     )
 
 
@@ -693,7 +679,6 @@ def ev_mad_outliers(t: dict[str, DataFrame]) -> DataFrame:
             rnd(F.first("med"), 4).alias("med"),
             rnd(F.first("mad"), 4).alias("mad"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -761,7 +746,6 @@ def op_mixture_weights(t: dict[str, DataFrame]) -> DataFrame:
                 6,
             ).alias("weight"),
         )
-        .orderBy("lang")
     )
 
 
@@ -833,7 +817,6 @@ def dd_contamination(t: dict[str, DataFrame]) -> DataFrame:
                 "overlap_frac"
             ),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -926,7 +909,6 @@ def txt_bigram_score(t: dict[str, DataFrame]) -> DataFrame:
                 "bigram_score"
             ),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -1005,7 +987,6 @@ def txt_ngram_novelty(t: dict[str, DataFrame]) -> DataFrame:
                 "novelty"
             ),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -1125,7 +1106,6 @@ def dd_span_scrub(t: dict[str, DataFrame]) -> DataFrame:
             ),
             F.col("res.m").alias("scrubbed_md5"),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -1241,7 +1221,6 @@ def ann_kmeans_update(t: dict[str, DataFrame]) -> DataFrame:
     return (
         moved.join(counts, "cid")
         .select("cid", "n_assigned", "n_dims", "moved_d2")
-        .orderBy("cid")
     )
 
 
@@ -1345,7 +1324,6 @@ def op_pps_sample(t: dict[str, DataFrame]) -> DataFrame:
             & (slots["p"] < lined["hi"]),
         )
         .select("source", "slot", "doc_id", "w")
-        .orderBy("source", "slot")
     )
 
 

@@ -28,7 +28,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from pypers_spark.functions.barrier import sort_barrier
 from pypers_spark.functions.rounding import duck_rnd, rnd
 from pypers_spark.functions.hashing import (
     affine_hash,
@@ -108,6 +107,11 @@ def _set_isize(a, b):
     array per evaluation. CaseWhen branches evaluate lazily, so equal
     pairs skip the intersect entirely and unequal pairs pay one extra
     O(first-mismatch) compare. |A ∩ A| = |A| — value-identical.
+
+    Precondition: both arrays are duplicate-free (``array_distinct``-
+    built sets). ``array_intersect`` dedups its result, so for an array
+    with repeated values (a raw minhash signature) |A ∩ A| < size(A)
+    and the fast path would change the value.
     """
     a = F.col(a) if isinstance(a, str) else a
     b = F.col(b) if isinstance(b, str) else b
@@ -137,7 +141,6 @@ def dd_exact(t: dict[str, DataFrame]) -> DataFrame:
     return (
         c.groupBy("fp")
         .agg(F.min("doc_id").alias("keep_id"), F.count("*").alias("n_copies"))
-        .orderBy("keep_id")
     )
 
 
@@ -165,7 +168,6 @@ def dd_exact_keep(t: dict[str, DataFrame]) -> DataFrame:
             ).alias("row")
         )
         .select("row.*")
-        .orderBy("doc_id")
     )
 
 
@@ -418,16 +420,14 @@ def dd_minhash_lsh(t: dict[str, DataFrame]) -> DataFrame:
     return _minhash_lsh_pairs(t, N_HASHES, N_BANDS)
 
 
-def _minhash_lsh_pairs_unsorted(
+def _minhash_lsh_pairs(
     t: dict[str, DataFrame], n_hashes: int, n_bands: int
 ) -> DataFrame:
-    """The dd_minhash_lsh verify pipeline WITHOUT the readout ordering —
-    what internal consumers (component labels → drop list / apply /
-    soft weights) want: caching the sorted form embeds a
-    rangepartitioning sort nobody downstream uses (see
-    _embedding_cos_pairs_unsorted). The signature table (base shingle
-    hashes) is parameter-independent and shared across all
-    configurations via its checkpoint key."""
+    """The dd_minhash_lsh verify pipeline, shared by the declared query
+    and the internal consumers (component labels → drop list / apply /
+    soft weights). The signature table (base shingle hashes) is
+    parameter-independent and shared across all configurations via its
+    checkpoint key."""
     docs = _signature_table(t)
     cand = _band_candidates(_bands_of(docs, n_hashes, n_bands))
     a = docs.select(F.col("doc_id").alias("id_a"), F.col("hs").alias("hs_a"))
@@ -441,19 +441,6 @@ def _minhash_lsh_pairs_unsorted(
         .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
         .select("id_a", "id_b", "jaccard")
     )
-
-
-def _minhash_lsh_pairs(
-    t: dict[str, DataFrame], n_hashes: int, n_bands: int
-) -> DataFrame:
-    """Declared-query form: ordered readout over the unsorted core.
-
-    sort_barrier: the verify chain (two joins + per-pair intersect)
-    sits directly under the final sort; without a boundary the range
-    sampler executes it twice (guide §8.3 / functions/barrier.py).
-    """
-    out = _minhash_lsh_pairs_unsorted(t, n_hashes, n_bands)
-    return sort_barrier(out, "id_a").orderBy("id_a", "id_b")
 
 
 def dd_minhash_lsh_prod(t: dict[str, DataFrame]) -> DataFrame:
@@ -508,7 +495,6 @@ def dd_threshold_curve(t: dict[str, DataFrame]) -> DataFrame:
         .select(bucket)
         .groupBy("j_bucket")
         .agg(F.count(F.lit(1)).alias("n_pairs"))
-        .orderBy("j_bucket")
     )
 
 
@@ -543,9 +529,7 @@ def _minhash_component_labels(t: dict[str, DataFrame]) -> DataFrame:
     from pypers_spark.functions.caching import tracked_persist
     from pypers_spark.functions.components import min_label_components
 
-    # Unsorted pair plan (r11): the cached edge list must not embed the
-    # declared query's rangepartitioning sort + barrier exchange.
-    pairs = _minhash_lsh_pairs_unsorted(t, N_HASHES, N_BANDS).select(
+    pairs = _minhash_lsh_pairs(t, N_HASHES, N_BANDS).select(
         "id_a", "id_b"
     )
     edges = tracked_persist(
@@ -578,7 +562,6 @@ def dd_minhash_drop_list(t: dict[str, DataFrame]) -> DataFrame:
         _minhash_component_labels(t)
         .filter(F.col("node") != F.col("lbl"))
         .select(F.col("node").alias("drop_id"), F.col("lbl").alias("keep_id"))
-        .orderBy("drop_id")
     )
 
 
@@ -645,7 +628,6 @@ def dd_minhash_apply(t: dict[str, DataFrame]) -> DataFrame:
             (F.col("n_docs_before") - F.col("n_docs_after")).alias("n_dropped"),
             "chars_before", "chars_after",
         )
-        .orderBy("source")
     )
 
 
@@ -800,9 +782,7 @@ def dd_minhash_est(t: dict[str, DataFrame]) -> DataFrame:
             rnd(inter / union, 4).alias("jaccard"),
         )
     )
-    # sort_barrier: four verify joins under the final sort; without a
-    # boundary the range sampler executes them all twice (barrier.py).
-    return sort_barrier(out, "id_a").orderBy("id_a", "id_b")
+    return out
 
 
 def _duck_minhash_est_sql() -> str:
@@ -880,7 +860,6 @@ def dd_incremental(t: dict[str, DataFrame]) -> DataFrame:
     return (
         batch_unique.join(base_fps, "fp", "left_anti")
         .select("doc_id", "source", "fp")
-        .orderBy("doc_id")
     )
 
 
@@ -938,7 +917,6 @@ def dd_simhash(t: dict[str, DataFrame]) -> DataFrame:
     return (
         per_doc.groupBy("simhash")
         .agg(F.min("doc_id").alias("keep_id"), F.count("*").alias("n_docs"))
-        .orderBy("keep_id")
     )
 
 
@@ -1088,11 +1066,7 @@ def dd_ngram_jaccard(t: dict[str, DataFrame]) -> DataFrame:
             F.lit(1.0).alias("jaccard"),
         )
     )
-    # sort_barrier: both union branches end in joins over the persisted
-    # gram tables; the range sampler would re-run them (barrier.py).
-    return sort_barrier(cross.unionByName(twins), "id_a").orderBy(
-        "source", "id_a", "id_b"
-    )
+    return cross.unionByName(twins)
 
 
 def _duck_ngram_sql() -> str:
@@ -1142,10 +1116,7 @@ def dd_ngram_jaccard_lsh(t: dict[str, DataFrame]) -> DataFrame:
         .filter(F.col("jaccard") >= NGRAM_JACCARD_THRESHOLD)
         .select("id_a", "id_b", "jaccard")
     )
-    # sort_barrier: the char-4-gram intersect verify is the measured
-    # cost of this key (12.2 cpu-s); without a boundary the range
-    # sampler ran it twice (12.2 + 10.1 cpu-s at sf0.1).
-    return sort_barrier(out, "id_a").orderBy("id_a", "id_b")
+    return out
 
 
 def _duck_ngram_lsh_sql() -> str:
@@ -1197,7 +1168,6 @@ def dd_lsh_bucket_stats(t: dict[str, DataFrame]) -> DataFrame:
             F.sum(over.cast("bigint")).alias("n_dropped_buckets"),
             F.sum(F.when(over, F.col("w")).otherwise(F.lit(0))).alias("n_dropped_rows"),
         )
-        .orderBy("band")
     )
 
 
@@ -1322,15 +1292,13 @@ def dd_lsh_curve(t: dict[str, DataFrame]) -> DataFrame:
         for s in s_vals
         for b, r in LSH_CONFIGS
     )
-    # range(..., numPartitions=1): the whole table lives in ONE
-    # partition, so sortWithinPartitions IS the global order and the
-    # orderBy range-exchange (sampling job + shuffle — ~0.8 s of pure
-    # job tax for 76 rows) disappears.
+    # range(..., numPartitions=1): the 76-row table is built in ONE
+    # partition of one task.
     grid = spark.range(0, 1, 1, 1).selectExpr(f"inline(array({structs}))")
     return grid.select(
         "bands", "rows_per_band", rnd(F.col("s"), 2).alias("s"),
         rnd(F.col("p_raw"), 6).alias("p_candidate"),
-    ).sortWithinPartitions("bands", "s")
+    )
 
 
 def _duck_lsh_curve_sql() -> str:
@@ -1524,7 +1492,7 @@ def dd_containment(t: dict[str, DataFrame]) -> DataFrame:
         F.when(F.col("ng_a") <= F.col("ng_b"), F.lit("a_in_b"))
         .otherwise(F.lit("b_in_a"))
         .alias("direction"),
-    ).orderBy("source", "id_a", "id_b")
+    )
 
 
 def _duck_containment_sql() -> str:
@@ -1679,10 +1647,7 @@ def dd_containment_idx(t: dict[str, DataFrame]) -> DataFrame:
         .otherwise(F.lit("b_in_a"))
         .alias("direction"),
     )
-    # sort_barrier: without a boundary under the final sort, the range
-    # sampler re-ran the whole pair aggregation + verify — both passes
-    # reading the 48 MB pair exchange (28.9 + 8.7 cpu-s at sf0.1).
-    return sort_barrier(out, "id_a").orderBy("id_a", "id_b")
+    return out
 
 
 def _duck_containment_idx_sql() -> str:
@@ -1772,7 +1737,6 @@ def dd_soft_weights(t: dict[str, DataFrame]) -> DataFrame:
                 (F.sum(F.floor(w * 1e6 + F.lit(0.5))) / 1e6), 4
             ).alias("effective_docs"),
         )
-        .orderBy("source")
     )
 
 
@@ -1955,10 +1919,7 @@ def dd_minhash_incremental(t: dict[str, DataFrame]) -> DataFrame:
             F.col("matched_base").isNull().cast("int").alias("admitted"),
         )
     )
-    # sort_barrier: the batch-probe left join sits directly under the
-    # final sort of a batch-cardinality readout; without a boundary the
-    # range sampler re-executes it (functions/barrier.py).
-    return sort_barrier(out, "doc_id").orderBy("doc_id")
+    return out
 
 
 def _duck_minhash_incr_sql() -> str:
@@ -2098,7 +2059,6 @@ def dd_fuzzy_names(t: dict[str, DataFrame]) -> DataFrame:
             F.min("best_dist").alias("min_dist"),
             F.max("best_dist").alias("max_dist"),
         )
-        .orderBy("kind")
     )
 
 
@@ -2497,7 +2457,6 @@ def pipe_entity_resolution(t: dict[str, DataFrame]) -> DataFrame:
                 F.when(F.col("canonical") % 10 == 0, 1)
             ).alias("n_clean_canonical"),
         )
-        .orderBy(F.desc("cluster_size"), "member_kinds")
     )
 
 

@@ -16,7 +16,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from pypers_spark.functions.barrier import sort_barrier
 from pypers_spark.functions.rounding import dsum, duck_dsum, duck_rnd, rnd
 
 SESSION_GAP_MIN = 30
@@ -35,7 +34,6 @@ def ev_tumbling_window(t: dict[str, DataFrame]) -> DataFrame:
             rnd(dsum(F.col("value")), 2).alias("total_value"),
             F.countDistinct("user_id").alias("n_users"),
         )
-        .orderBy("hour_start", "event_type")
     )
 
 
@@ -58,7 +56,6 @@ def ev_sliding_topk(t: dict[str, DataFrame]) -> DataFrame:
     return (
         daily.withColumn("rk", F.row_number().over(w).cast("bigint"))
         .filter(F.col("rk") <= 3)
-        .orderBy("day", "rk")
     )
 
 
@@ -95,16 +92,12 @@ def ev_sessionize(t: dict[str, DataFrame]) -> DataFrame:
         )
         .withColumn("session_id", F.sum("new_session").over(w.rowsBetween(Window.unboundedPreceding, 0)))
     )
-    out = sessions.groupBy("user_id", "session_id").agg(
+    return sessions.groupBy("user_id", "session_id").agg(
         F.count("*").alias("n_events"),
         rnd(dsum(F.col("value")), 2).alias("session_value"),
         F.min("ts").alias("session_start"),
         F.max("ts").alias("session_end"),
     )
-    # sort_barrier: the lag/running-sum windows + aggregation reuse the
-    # user_id exchange, leaving no boundary under the final sort — the
-    # range sampler re-ran the whole chain (0.76 + 0.34 cpu-s at sf0.1).
-    return sort_barrier(out, "user_id").orderBy("user_id", "session_id")
 
 
 ORACLE_SESSIONIZE = f"""
@@ -170,7 +163,7 @@ def ev_asof_join(t: dict[str, DataFrame]) -> DataFrame:
         F.col("last_view_id").alias("view_id"),
         F.col("last_view_ts").alias("view_ts"),
         (F.unix_timestamp("ev_ts") - F.unix_timestamp("last_view_ts")).cast("bigint").alias("gap_s"),
-    ).orderBy("purchase_id")
+    )
 
 
 ORACLE_ASOF = """
@@ -221,7 +214,6 @@ def ev_funnel(t: dict[str, DataFrame]) -> DataFrame:
         v.join(c, "user_id")
         .join(p, "user_id")
         .select("user_id", "t_view", "t_click", "t_purchase")
-        .orderBy("user_id")
     )
 
 
@@ -263,7 +255,6 @@ def ev_retention(t: dict[str, DataFrame]) -> DataFrame:
             F.count("*").alias("active_users"),
             F.count(F.col("d1.user_id")).alias("retained_users"),
         )
-        .orderBy("day")
     )
 
 
@@ -289,7 +280,6 @@ def ev_props_extract(t: dict[str, DataFrame]) -> DataFrame:
             rnd(F.sum("k").cast("double") / F.count(F.lit(1)), 4).alias("avg_k"),
             F.max("k").alias("max_k"),
         )
-        .orderBy("event_type")
     )
 
 

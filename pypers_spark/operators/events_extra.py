@@ -21,7 +21,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from pypers_spark.functions.barrier import sort_barrier
 from pypers_spark.functions.rounding import dsum, dsum_wide, duck_dsum, duck_rnd, rnd
 
 # DuckDB twin of Spark's unix_timestamp() (second precision).
@@ -45,7 +44,6 @@ def ev_gap_stats(t: dict[str, DataFrame]) -> DataFrame:
             F.max("gap_s").alias("max_gap_s"),
             F.min("gap_s").alias("min_gap_s"),
         )
-        .orderBy("user_id")
     )
 
 
@@ -100,7 +98,6 @@ def ev_first_touch(t: dict[str, DataFrame]) -> DataFrame:
             "purchase_id", "user_id", "purchase_ts",
             "first_event_id", "first_event_type", "secs_since_first",
         )
-        .orderBy("purchase_id")
     )
 
 
@@ -144,7 +141,6 @@ def ev_type_transitions(t: dict[str, DataFrame]) -> DataFrame:
         counts.withColumn(
             "p", rnd(F.col("n").cast("double") / F.sum("n").over(w_src), 4)
         )
-        .orderBy("prev_type", "curr_type")
     )
 
 
@@ -190,7 +186,6 @@ def ev_zscore_outliers(t: dict[str, DataFrame]) -> DataFrame:
             "value",
             rnd((F.col("value") - F.col("mean")) / F.col("sd"), 4).alias("zscore"),
         )
-        .orderBy("event_id")
     )
 
 
@@ -243,7 +238,6 @@ def ev_rolling_wau(t: dict[str, DataFrame]) -> DataFrame:
     return (
         dau.join(wau, dau["day"] == wau["wday"])
         .select("day", "dau", "wau")
-        .orderBy("day")
     )
 
 
@@ -291,7 +285,6 @@ def ev_session_window(t: dict[str, DataFrame]) -> DataFrame:
             "n_events",
             "session_value",
         )
-        .orderBy("user_id", "session_start")
     )
 
 
@@ -400,7 +393,6 @@ def ev_asof_tolerance(t: dict[str, DataFrame]) -> DataFrame:
                 2,
             ).alias("avg_fresh_gap_s"),
         )
-        .orderBy("outcome")
     )
 
 
@@ -486,7 +478,6 @@ def _funnel_windowed(t: dict[str, DataFrame], window_s: int) -> DataFrame:
             .cast("bigint")
             .alias("convert_s"),
         )
-        .orderBy("user_id")
     )
 
 
@@ -591,7 +582,6 @@ def ev_attribution_linear(t: dict[str, DataFrame]) -> DataFrame:
             F.count(F.lit(1)).alias("n_purchases"),
             rnd(dsum(F.col("credit")), 2).alias("attributed_value"),
         )
-        .orderBy("view_id")
     )
 
 
@@ -661,7 +651,6 @@ def ev_cohort_retention(t: dict[str, DataFrame]) -> DataFrame:
                 "retention_pct"
             ),
         )
-        .orderBy("cohort_week", "week_offset")
     )
 
 
@@ -740,7 +729,6 @@ def ev_ewma(t: dict[str, DataFrame]) -> DataFrame:
             "value",
             rnd(num / den, 4).alias("ewma"),
         )
-        .orderBy("user_id", "ts", "event_id")
     )
 
 
@@ -884,7 +872,6 @@ def ev_cumulative_users(t: dict[str, DataFrame]) -> DataFrame:
             "new_users",
             F.sum("new_users").over(w).alias("cumulative_users"),
         )
-        .orderBy("day")
     )
 
 
@@ -957,7 +944,7 @@ def ev_ab_lift(t: dict[str, DataFrame]) -> DataFrame:
         rnd(mean_b, 6).alias("mean_b"),
         rnd(mean_b - mean_a, 6).alias("lift"),
         F.when(se > 0, rnd((mean_b - mean_a) / se, 4)).alias("t_stat"),
-    ).orderBy("event_type")
+    )
 
 
 def _duck_ab_lift_sql() -> str:
@@ -1062,7 +1049,7 @@ def ev_delta_rollup(t: dict[str, DataFrame]) -> DataFrame:
         rnd((F.col("s_q").cast("double") / 1e6) / F.col("n"), 6).alias("mean"),
         rnd(F.col("v_min"), 4).alias("v_min"),
         rnd(F.col("v_max"), 4).alias("v_max"),
-    ).orderBy("day", "event_type")
+    )
 
 
 ORACLE_DELTA_ROLLUP = f"""
@@ -1148,10 +1135,7 @@ def ev_feature_matrix(t: dict[str, DataFrame]) -> DataFrame:
             rnd(F.col("value"), 4).alias("label_value"),
         )
     )
-    # sort_barrier: the point-in-time window chain sits directly under
-    # the final sort; the range sampler re-ran it (1.18 + 0.54 cpu-s at
-    # sf0.1 — see functions/barrier.py).
-    return sort_barrier(out, "purchase_id").orderBy("purchase_id")
+    return out
 
 
 def _duck_feature_matrix_sql() -> str:
@@ -1245,7 +1229,6 @@ def ev_seasonal_baseline(t: dict[str, DataFrame]) -> DataFrame:
             rnd(F.col("mean_n"), 4).alias("mean_n"),
             rnd(F.col("sd_n"), 4).alias("sd_n"),
         )
-        .orderBy("day", "hod", "event_type")
     )
 
 
@@ -1340,7 +1323,6 @@ def ev_markov_stationary(t: dict[str, DataFrame]) -> DataFrame:
             "n_events",
             rnd(F.col("n_events") / F.lit(float(total)), 6).alias("raw_share"),
         )
-        .orderBy("state")
     )
 
 
@@ -1491,7 +1473,6 @@ def ev_rfm_segments(t: dict[str, DataFrame]) -> DataFrame:
                 (F.sum(F.floor(F.col("monetary") * 1e6 + F.lit(0.5))) / 1e6), 2
             ).alias("segment_value"),
         )
-        .orderBy("r_score", "f_score", "m_score")
     )
 
 
@@ -1589,7 +1570,7 @@ def ev_forecast_linear(t: dict[str, DataFrame]) -> DataFrame:
         rnd(slope, 6).alias("slope_per_day"),
         rnd(intercept, 4).alias("intercept"),
         rnd(intercept + slope * (F.col("x_last") + 1), 4).alias("forecast_next_day"),
-    ).orderBy("event_type")
+    )
 
 
 ORACLE_FORECAST = f"""
@@ -1661,7 +1642,6 @@ def ev_rate_limit(t: dict[str, DataFrame]) -> DataFrame:
                 6,
             ).alias("throttle_rate"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -1777,7 +1757,6 @@ def ev_psi_drift(t: dict[str, DataFrame]) -> DataFrame:
             F.first("t_cur").alias("n_cur"),
         )
         .withColumn("drifted", F.col("psi") > PSI_THRESHOLD)
-        .orderBy("event_type")
     )
 
 
@@ -1911,7 +1890,6 @@ def ev_cooccurrence(t: dict[str, DataFrame]) -> DataFrame:
             "type_a", "type_b", "pair_supp", "supp_a", "supp_b",
             rnd(lift, 4).alias("lift"),
         )
-        .orderBy("type_a", "type_b")
     )
 
 
@@ -2036,7 +2014,6 @@ def ev_bot_detect(t: dict[str, DataFrame]) -> DataFrame:
             # total goes through the decimal-accumulating dsum_wide.
             rnd(dsum_wide(F.col("gap_var")) / F.count("*"), 4).alias("avg_gap_var"),
         )
-        .orderBy("is_bot")
     )
 
 
@@ -2115,10 +2092,7 @@ def ev_slo_report(t: dict[str, DataFrame]) -> DataFrame:
         rnd(F.col("_p95"), 4).alias("p95"),
         rnd(F.col("_p99"), 4).alias("p99"),
     ).withColumn("slo_breach", F.col("p95") > SLO_P95_MAX)
-    # sort_barrier: the cumulative-rank percentile chain sits directly
-    # under the final sort of a per-type readout; the range sampler
-    # re-ran it (0.47 + 0.30 cpu-s, 1-task stages at sf0.1).
-    return sort_barrier(out, "event_type").orderBy("event_type")
+    return out
 
 
 ORACLE_SLO_REPORT = f"""
@@ -2182,7 +2156,7 @@ def ev_error_budget(t: dict[str, DataFrame]) -> DataFrame:
         ),
         rnd(burn_frac, 6).alias("budget_burned"),
         (rnd(burn_frac, 6) > rnd(elapsed_frac, 6)).alias("burning_fast"),
-    ).orderBy("day")
+    )
 
 
 ORACLE_ERROR_BUDGET = f"""
@@ -2258,7 +2232,6 @@ def ev_concurrency(t: dict[str, DataFrame]) -> DataFrame:
             F.count("*").alias("n_active_sessions"),
             F.count_distinct("user_id").alias("n_active_users"),
         )
-        .orderBy("hour")
     )
 
 
@@ -2362,7 +2335,6 @@ def ev_anomaly_seasonal(t: dict[str, DataFrame]) -> DataFrame:
             "anom_rate",
             rnd(F.col("n_anom").cast("double") / F.col("n"), 6),
         )
-        .orderBy("event_type", "hr")
     )
 
 
@@ -2446,7 +2418,6 @@ def ev_srm_check(t: dict[str, DataFrame]) -> DataFrame:
             rnd(chi2, 6).alias("chi2"),
             (chi2 > SRM_CHI2_95).alias("srm_flag"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -2611,7 +2582,6 @@ def ev_calibration_bins(t: dict[str, DataFrame]) -> DataFrame:
             "n_pos",
             rnd(F.col("n_pos").cast("double") / F.col("n"), 6).alias("pos_rate"),
         )
-        .orderBy("bin")
     )
 
 
@@ -2733,7 +2703,7 @@ def ev_cuped(t: dict[str, DataFrame]) -> DataFrame:
             6,
         ).alias("var_reduction"),
     )
-    return out.orderBy("variant")
+    return out
 
 
 def _oracle_cuped() -> str:
@@ -2875,7 +2845,6 @@ def ev_attribution_position(t: dict[str, DataFrame]) -> DataFrame:
             F.count(F.lit(1)).alias("n_touches"),
             rnd(dsum(F.col("credit")), 2).alias("attributed_value"),
         )
-        .orderBy("touch_type", "pos_class")
     )
 
 
@@ -2978,7 +2947,6 @@ def ev_qte(t: dict[str, DataFrame]) -> DataFrame:
         c.crossJoin(tr)
         .select("n_control", "n_treat", rows)
         .select("n_control", "n_treat", "r.decile", "r.q_control", "r.q_treat", "r.qte")
-        .orderBy("decile")
     )
 
 

@@ -215,7 +215,6 @@ def gs_radius_join(t: dict[str, DataFrame]) -> DataFrame:
             rnd(F.min("dist_km"), 4).alias("min_km"),
             rnd(F.max("dist_km"), 4).alias("max_km"),
         )
-        .orderBy("dist_decile")
     )
 
 
@@ -337,7 +336,6 @@ def gs_dbscan_core(t: dict[str, DataFrame]) -> DataFrame:
                 (F.col("n_neighbors") >= DBSCAN_MIN_PTS).cast("int")
             ).alias("is_core"),
         )
-        .orderBy("nn_bucket")
     )
 
 
@@ -489,7 +487,6 @@ def gs_knn_join(t: dict[str, DataFrame]) -> DataFrame:
             rnd(F.min("dk"), 4).alias("min_dk_km"),
             rnd(F.max("dk"), 4).alias("max_dk_km"),
         )
-        .orderBy("knn_bucket")
     )
 
 

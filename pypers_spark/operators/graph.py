@@ -70,15 +70,11 @@ def _t03_pairs(t: dict[str, DataFrame]) -> DataFrame:
     from pypers_spark.functions.caching import tracked_persist
     from pypers_spark.operators.similarity import (
         COS_T03,
-        _embedding_cos_pairs_unsorted,
+        _embedding_cos_pairs,
     )
 
-    # UNSORTED pair plan (r11): the cached sorted form embedded a
-    # rangepartitioning sort, so the cache build paid the pairwise-
-    # cosine join twice (sampling pass + real pass) plus a sort no
-    # graph consumer uses (they aggregate/union immediately).
     return tracked_persist(
-        _embedding_cos_pairs_unsorted(t, COS_T03).select("id_a", "id_b"),
+        _embedding_cos_pairs(t, COS_T03).select("id_a", "id_b"),
         "graph.t03_pairs",
     )
 
@@ -97,14 +93,13 @@ def _pagerank_on_pairs(t: dict[str, DataFrame], tau: float, cache_tag: str) -> D
     as pure relational algebra.
     """
     from pypers_spark.functions.caching import tracked_persist
-    from pypers_spark.operators.similarity import _embedding_cos_pairs_unsorted
+    from pypers_spark.operators.similarity import _embedding_cos_pairs
 
     # Every iteration re-reads edges and deg — persist them, or the
     # O(n^2/block) pairwise cosine join re-executes once per iteration
     # (measured 8.9 s vs 2 s for 3 iterations at sf0.1). This is the
     # parquet-checkpoint boundary a 100 TB run would write instead.
-    # Unsorted pair plan: see _t03_pairs.
-    pairs = _embedding_cos_pairs_unsorted(t, tau).select("id_a", "id_b")
+    pairs = _embedding_cos_pairs(t, tau).select("id_a", "id_b")
     edges = tracked_persist(
         pairs.union(
             pairs.select(F.col("id_b").alias("id_a"), F.col("id_a").alias("id_b"))
@@ -236,7 +231,6 @@ def op_winsorize(t: dict[str, DataFrame]) -> DataFrame:
             rnd(F.first("p05"), 4).alias("p05"),
             rnd(F.first("p95"), 4).alias("p95"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -317,7 +311,7 @@ def op_profile_table(t: dict[str, DataFrame]) -> DataFrame:
         "n_distinct",
         rnd(F.col("min_num"), 4).alias("min_num"),
         rnd(F.col("max_num"), 4).alias("max_num"),
-    ).orderBy("col_name")
+    )
 
 
 def _duck_profile() -> str:
@@ -359,7 +353,7 @@ def gr_degree_stats(t: dict[str, DataFrame]) -> DataFrame:
     )
     deg = edges.groupBy("id_a").agg(F.count("*").alias("deg"))
     return (
-        deg.groupBy("deg").agg(F.count("*").alias("n_nodes")).orderBy("deg")
+        deg.groupBy("deg").agg(F.count("*").alias("n_nodes"))
     )
 
 
@@ -623,7 +617,6 @@ def gr_bfs_reach(t: dict[str, DataFrame]) -> DataFrame:
             F.min("v").alias("min_node"),
             F.max("v").alias("max_node"),
         )
-        .orderBy("dist")
     )
 
 
@@ -740,7 +733,7 @@ def gr_k_core(t: dict[str, DataFrame]) -> DataFrame:
     out = stats[0]
     for s in stats[1:]:
         out = out.unionByName(s)
-    return out.orderBy("round")
+    return out
 
 
 def _oracle_k_core() -> str:

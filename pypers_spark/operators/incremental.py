@@ -111,7 +111,6 @@ def op_incremental_join(t: dict[str, DataFrame]) -> DataFrame:
             rnd(F.col("rev"), 2).alias("revenue"),
             "n_quadrants",
         )
-        .orderBy("c_nationkey")
     )
 
 
@@ -171,7 +170,6 @@ def op_compaction_plan(t: dict[str, DataFrame]) -> DataFrame:
             F.sum("bytes").alias("total_bytes"),
             F.sum("n_rows").alias("n_rows"),
         )
-        .orderBy("p_month", "out_file")
     )
 
 
@@ -249,7 +247,6 @@ def op_target_encode(t: dict[str, DataFrame]) -> DataFrame:
             rnd(F.min("enc"), 6).alias("min_enc"),
             rnd(F.max("enc"), 6).alias("max_enc"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -345,7 +342,6 @@ def op_snapshot_diff(t: dict[str, DataFrame]) -> DataFrame:
             # the int64 fast path
             rnd(dsum_wide(F.col("p2v") - F.col("p1v")), 2).alias("value_drift"),
         )
-        .orderBy("change_type")
     )
 
 
@@ -395,9 +391,10 @@ class IngestIncrDocs(Stage):
 
     def process(self, pipeline, config, status=None, **inputs):
         from pypers_spark.session import current_session
+        from pypers_spark.sources.io import read_parquet
 
         spark = current_session()
-        df = spark.read.parquet(f'{config["sf_dir"]}/documents.parquet')
+        df = read_parquet(spark, f'{config["sf_dir"]}/documents.parquet')
         n = int(spark.conf.get("spark.sql.shuffle.partitions"))
         base = df.repartition(n, F.col("doc_id"))
         batch = base.select(
@@ -492,7 +489,7 @@ def pipe_incremental(t) -> DataFrame:
     )
     config = Config({"ingest-incr-docs": {"sf_dir": t._sf_dir}})
     data, _, _ = pipeline.process(input_id=1, config=config)
-    return data["report"].orderBy("source")
+    return data["report"]
 
 
 _DUCK_BATCH_NTOK = f"len(string_split({duck_normalize_text('text')}, ' '))"
@@ -596,7 +593,6 @@ def op_zone_map_prune(t: dict[str, DataFrame]) -> DataFrame:
                 F.count(F.when(skippable, 1)).cast("double") / F.count("*"), 4
             ).alias("skip_ratio"),
         )
-        .orderBy("layout")
     )
 
 
@@ -666,7 +662,6 @@ def op_k_anonymity(t: dict[str, DataFrame]) -> DataFrame:
             ),
             F.min("class_size").alias("min_class_size"),
         )
-        .orderBy("c_mktsegment")
     )
 
 
@@ -870,7 +865,6 @@ def op_interval_overlap(t: dict[str, DataFrame]) -> DataFrame:
             F.sum("overlap_days").alias("total_overlap_days"),
             F.max("overlap_days").alias("max_overlap_days"),
         )
-        .orderBy("month")
     )
 
 
@@ -959,7 +953,7 @@ def op_dsr_export(t: dict[str, DataFrame]) -> DataFrame:
         F.lit(None).cast("string").alias("earliest"),
         F.lit(None).cast("string").alias("latest"),
     )
-    return ev.unionByName(orders).unionByName(cust).orderBy("table_name")
+    return ev.unionByName(orders).unionByName(cust)
 
 
 ORACLE_DSR_EXPORT = f"""
@@ -1041,7 +1035,6 @@ def op_benford_check(t: dict[str, DataFrame]) -> DataFrame:
             rnd(expected, 6).alias("benford"),
             rnd(dev, 6).alias("chi2_term"),
         )
-        .orderBy("d")
     )
 
 
@@ -1130,7 +1123,7 @@ def op_table_checksum(t: dict[str, DataFrame]) -> DataFrame:
         "events",
         F.concat_ws("|", F.col("event_id"), F.col("user_id")),
     )
-    return o.unionByName(c).unionByName(e).orderBy("table_name")
+    return o.unionByName(c).unionByName(e)
 
 
 def _duck_checksum_leg(table: str, key: str) -> str:

@@ -77,9 +77,10 @@ class IngestSnapshot(Stage):
 
     def process(self, pipeline, config, status=None, **inputs):
         from pypers_spark.session import current_session
+        from pypers_spark.sources.io import read_parquet
 
         spark = current_session()
-        o = spark.read.parquet(f'{config["sf_dir"]}/orders.parquet').select(
+        o = read_parquet(spark, f'{config["sf_dir"]}/orders.parquet').select(
             F.col("o_orderkey").alias("k"),
             F.col("o_totalprice").alias("price"),
             F.col("o_orderdate").alias("odate"),

@@ -41,7 +41,7 @@ _REV_AGG = f"{duck_rnd(duck_dsum(DUCK_REV), 2)} AS revenue"
 
 
 def q1_pricing_summary(t: dict[str, DataFrame]) -> DataFrame:
-    """TPC-H Q1: pricing summary report (filter → groupBy multi-agg → sort)."""
+    """TPC-H Q1: pricing summary report (filter → groupBy multi-agg)."""
     li = t["lineitem"].filter(F.col("l_shipdate") <= F.lit("1998-09-02"))
     return (
         li.groupBy("l_returnflag", "l_linestatus")
@@ -57,7 +57,6 @@ def q1_pricing_summary(t: dict[str, DataFrame]) -> DataFrame:
             rnd(davg(F.col("l_discount")), 4).alias("avg_disc"),
             F.count("*").alias("count_order"),
         )
-        .orderBy("l_returnflag", "l_linestatus")
     )
 
 
@@ -130,7 +129,6 @@ def q5_local_supplier(t: dict[str, DataFrame]) -> DataFrame:
         )
         .groupBy("n_name")
         .agg(rnd(dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("revenue"))
-        .orderBy(F.desc("revenue"), "n_name")
     )
 
 
@@ -251,7 +249,6 @@ def op_filter_project(t: dict[str, DataFrame]) -> DataFrame:
         t["orders"]
         .filter((F.col("o_totalprice") > 100000) & (F.col("o_orderstatus") == "O"))
         .select("o_orderkey", "o_custkey", "o_totalprice")
-        .orderBy("o_orderkey")
     )
 
 
@@ -264,9 +261,7 @@ ORDER BY o_orderkey
 
 def op_distinct(t: dict[str, DataFrame]) -> DataFrame:
     """Exact distinct (shuffle on the full row key)."""
-    return t["orders"].select("o_orderstatus", "o_orderpriority").distinct().orderBy(
-        "o_orderstatus", "o_orderpriority"
-    )
+    return t["orders"].select("o_orderstatus", "o_orderpriority").distinct()
 
 
 ORACLE_DISTINCT = """
@@ -279,7 +274,7 @@ def op_union(t: dict[str, DataFrame]) -> DataFrame:
     """unionByName + distinct across two filtered branches."""
     a = t["customer"].filter(F.col("c_acctbal") > 9000).select(F.col("c_custkey").alias("key"))
     b = t["supplier"].filter(F.col("s_acctbal") > 9000).select(F.col("s_suppkey").alias("key"))
-    return a.unionByName(b).distinct().orderBy("key")
+    return a.unionByName(b).distinct()
 
 
 ORACLE_UNION = """
@@ -314,7 +309,6 @@ def op_join_inner(t: dict[str, DataFrame]) -> DataFrame:
         .join(F.broadcast(t["nation"]), F.col("c_nationkey") == F.col("n_nationkey"))
         .groupBy("n_name")
         .agg(F.count("*").alias("n_customers"), rnd(davg(F.col("c_acctbal")), 4).alias("avg_bal"))
-        .orderBy("n_name")
     )
 
 
@@ -333,7 +327,6 @@ def op_join_left(t: dict[str, DataFrame]) -> DataFrame:
         .join(big, F.col("c_custkey") == F.col("o_custkey"), "left")
         .groupBy("c_custkey")
         .agg(F.count("o_orderkey").alias("n_big_orders"))
-        .orderBy("c_custkey")
     )
 
 
@@ -352,7 +345,6 @@ def op_join_semi(t: dict[str, DataFrame]) -> DataFrame:
         t["customer"]
         .join(urgent, F.col("c_custkey") == F.col("o_custkey"), "left_semi")
         .select("c_custkey", "c_name")
-        .orderBy("c_custkey")
     )
 
 
@@ -369,7 +361,6 @@ def op_join_anti(t: dict[str, DataFrame]) -> DataFrame:
         t["customer"]
         .join(t["orders"], F.col("c_custkey") == F.col("o_custkey"), "left_anti")
         .select("c_custkey", "c_name")
-        .orderBy("c_custkey")
     )
 
 
@@ -386,9 +377,6 @@ def op_agg_rollup(t: dict[str, DataFrame]) -> DataFrame:
         t["orders"]
         .rollup("o_orderstatus", "o_orderpriority")
         .agg(F.count("*").alias("n"), rnd(dsum(F.col("o_totalprice")), 2).alias("total"))
-        .orderBy(
-            F.col("o_orderstatus").asc_nulls_first(), F.col("o_orderpriority").asc_nulls_first()
-        )
     )
 
 
@@ -405,7 +393,6 @@ def op_agg_cube(t: dict[str, DataFrame]) -> DataFrame:
         t["lineitem"]
         .cube("l_returnflag", "l_linestatus")
         .agg(F.count("*").alias("n"), rnd(dsum(F.col("l_quantity")), 2).alias("qty"))
-        .orderBy(F.col("l_returnflag").asc_nulls_first(), F.col("l_linestatus").asc_nulls_first())
     )
 
 
@@ -425,7 +412,6 @@ def op_pivot(t: dict[str, DataFrame]) -> DataFrame:
         .agg(F.count(F.lit(1)))
         .na.fill(0)
         .withColumnsRenamed({"F": "n_f", "O": "n_o", "P": "n_p"})
-        .orderBy("o_orderpriority")
     )
 
 
@@ -446,7 +432,6 @@ def op_window_rank(t: dict[str, DataFrame]) -> DataFrame:
         .withColumn("rk", F.rank().over(w).cast("bigint"))
         .filter(F.col("rk") <= 3)
         .select("o_orderpriority", "o_orderkey", "o_totalprice", "rk")
-        .orderBy("o_orderpriority", "rk", "o_orderkey")
     )
 
 
@@ -471,7 +456,6 @@ def op_window_running(t: dict[str, DataFrame]) -> DataFrame:
         )
         .withColumn("prev_price", F.lag("o_totalprice").over(w))
         .select("o_custkey", "o_orderkey", "o_orderdate", "running_total", "prev_price")
-        .orderBy("o_custkey", "o_orderdate", "o_orderkey")
     )
 
 
@@ -490,7 +474,6 @@ def op_exists_in(t: dict[str, DataFrame]) -> DataFrame:
         t["supplier"]
         .join(F.broadcast(keys), F.col("s_nationkey") == F.col("n_nationkey"), "left_semi")
         .select("s_suppkey", "s_name")
-        .orderBy("s_suppkey")
     )
 
 
@@ -508,7 +491,6 @@ def op_cross_small(t: dict[str, DataFrame]) -> DataFrame:
         t["region"]
         .crossJoin(statuses)
         .select("r_name", "o_orderstatus")
-        .orderBy("r_name", "o_orderstatus")
     )
 
 
@@ -527,7 +509,6 @@ def op_scalar_subquery(t: dict[str, DataFrame]) -> DataFrame:
         .crossJoin(F.broadcast(avg_price))
         .filter(F.col("o_totalprice") > F.col("avg_price"))
         .select("o_orderkey", "o_totalprice")
-        .orderBy("o_orderkey")
     )
 
 
@@ -553,7 +534,6 @@ def op_case_expr(t: dict[str, DataFrame]) -> DataFrame:
             F.count("*").alias("n"),
             rnd(davg(F.col("o_totalprice")), 4).alias("avg_price"),
         )
-        .orderBy("bucket")
     )
 
 
@@ -575,7 +555,6 @@ def op_null_handling(t: dict[str, DataFrame]) -> DataFrame:
             F.coalesce(F.col("nickname"), F.lit("(none)")).alias("segment_or_none"),
             F.col("nickname").eqNullSafe(F.lit("MACHINERY")).alias("is_machinery"),
         )
-        .orderBy("c_custkey")
     )
 
 
@@ -600,7 +579,6 @@ def op_string_funcs(t: dict[str, DataFrame]) -> DataFrame:
             F.concat_ws("|", F.col("p_brand"), F.col("p_type")).alias("brand_type"),
             F.trim(F.upper(F.col("p_brand"))).alias("brand_up"),
         )
-        .orderBy("p_partkey")
     )
 
 
@@ -629,7 +607,6 @@ def op_date_funcs(t: dict[str, DataFrame]) -> DataFrame:
             .cast("int")
             .alias("days_to_eoy"),
         )
-        .orderBy("o_orderkey")
     )
 
 
@@ -684,7 +661,6 @@ def op_sample(t: dict[str, DataFrame]) -> DataFrame:
         t["orders"]
         .filter(h % 10 == 0)
         .select("o_orderkey", "o_custkey", "o_totalprice")
-        .orderBy("o_orderkey")
     )
 
 
@@ -773,7 +749,6 @@ def op_grouping_sets(t: dict[str, DataFrame]) -> DataFrame:
             rnd(dsum(F.col("l_quantity")), 2).alias("sum_qty"),
             F.grouping_id().cast("bigint").alias("gid"),
         )
-        .orderBy("gid", "l_returnflag", "l_linestatus")
     )
 
 
@@ -796,7 +771,7 @@ def op_intersect(t: dict[str, DataFrame]) -> DataFrame:
     orders = t["orders"]
     early = orders.filter(F.col("o_orderdate") < F.lit("1998-01-01")).select("o_custkey")
     late = orders.filter(F.col("o_orderdate") >= F.lit("1998-01-01")).select("o_custkey")
-    return early.intersect(late).orderBy("o_custkey")
+    return early.intersect(late)
 
 
 ORACLE_INTERSECT = """
@@ -813,7 +788,7 @@ def op_except(t: dict[str, DataFrame]) -> DataFrame:
     orders = t["orders"]
     late = orders.filter(F.col("o_orderdate") >= F.lit("2001-01-01")).select("o_custkey")
     early = orders.filter(F.col("o_orderdate") < F.lit("1996-01-01")).select("o_custkey")
-    return late.subtract(early).orderBy("o_custkey")
+    return late.subtract(early)
 
 
 ORACLE_EXCEPT = """
@@ -837,7 +812,6 @@ def op_window_distribution(t: dict[str, DataFrame]) -> DataFrame:
             rnd(F.percent_rank().over(w), 6).alias("pct_rank"),
             rnd(F.cume_dist().over(w), 6).alias("cume"),
         )
-        .orderBy("c_custkey")
     )
 
 
@@ -860,7 +834,6 @@ def op_explode(t: dict[str, DataFrame]) -> DataFrame:
         t["part"]
         .select("p_partkey", F.posexplode(toks).alias("pos", "token"))
         .withColumn("pos", F.col("pos").cast("bigint"))
-        .orderBy("p_partkey", "pos")
     )
 
 
@@ -899,7 +872,6 @@ def op_window_firstlast(t: dict[str, DataFrame]) -> DataFrame:
             F.last("o_orderkey").over(w).alias("last_order"),
             F.nth_value("o_orderkey", 2).over(w).alias("second_order"),
         )
-        .orderBy("o_orderkey")
     )
 
 
@@ -931,7 +903,7 @@ def op_percentile_exact(t: dict[str, DataFrame]) -> DataFrame:
         "l_returnflag",
         rnd(F.col("_p50"), 4).alias("p50"),
         rnd(F.col("_p90"), 4).alias("p90"),
-    ).orderBy("l_returnflag")
+    )
 
 
 ORACLE_PERCENTILE_EXACT = f"""
@@ -958,7 +930,6 @@ def op_join_anti_filtered(t: dict[str, DataFrame]) -> DataFrame:
         t["customer"]
         .join(orders_95, F.col("c_custkey") == F.col("o_custkey"), "left_anti")
         .select("c_custkey", "c_name")
-        .orderBy("c_custkey")
     )
 
 

@@ -48,7 +48,6 @@ def op_date_spine(t: dict[str, DataFrame]) -> DataFrame:
             F.coalesce(F.col("n_orders"), F.lit(0)).alias("n_orders"),
             rnd(F.coalesce(F.col("rev"), F.lit(0.0)), 2).alias("revenue"),
         )
-        .orderBy("day")
     )
 
 
@@ -87,7 +86,6 @@ def op_histogram(t: dict[str, DataFrame]) -> DataFrame:
             rnd(F.max("o_totalprice"), 2).alias("hi"),
         )
         .withColumn("bucket_start", rnd(F.col("bucket") * width, 2))
-        .orderBy("bucket")
     )
 
 
@@ -115,7 +113,6 @@ def op_string_agg(t: dict[str, DataFrame]) -> DataFrame:
             F.array_join(F.array_sort(F.collect_list("n_name")), ",").alias("nations"),
             F.count("*").alias("n_nations"),
         )
-        .orderBy("r_name")
     )
 
 
@@ -142,7 +139,6 @@ def op_distinct_filter(t: dict[str, DataFrame]) -> DataFrame:
             ).alias("n_building"),
             F.count_distinct(F.col("c_mktsegment")).alias("n_segments"),
         )
-        .orderBy("c_nationkey")
     )
 
 
@@ -182,7 +178,6 @@ def op_range_join(t: dict[str, DataFrame]) -> DataFrame:
             F.count("*").alias("n_lines"),
             rnd(dsum(F.col("l_extendedprice")), 2).alias("band_revenue"),
         )
-        .orderBy("band_id")
     )
 
 
@@ -231,7 +226,7 @@ def op_upsert(t: dict[str, DataFrame]) -> DataFrame:
         .when(F.col("s_key").isNull(), F.lit("carry"))
         .otherwise(F.lit("update"))
         .alias("merge_action"),
-    ).orderBy("c_custkey")
+    )
 
 
 ORACLE_UPSERT = f"""
@@ -276,7 +271,6 @@ def op_validity_intervals(t: dict[str, DataFrame]) -> DataFrame:
             F.col("ts").alias("valid_from"),
             "valid_to",
         )
-        .orderBy("user_id", "valid_from")
     )
 
 
@@ -323,7 +317,7 @@ def op_salted_agg(t: dict[str, DataFrame]) -> DataFrame:
         "event_type",
         F.col("n_events").cast("bigint").alias("n_events"),
         rnd((F.col("total_scaled") / F.lit(1e6)).cast("double"), 2).alias("total_value"),
-    ).orderBy("event_type")
+    )
 
 
 ORACLE_SALTED_AGG = f"""
@@ -363,7 +357,6 @@ def op_salted_join(t: dict[str, DataFrame]) -> DataFrame:
             # correctly, not just preserved row counts
             F.sum(F.col("user_n")).alias("sum_user_n"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -451,7 +444,6 @@ def op_file_stats(t: dict[str, DataFrame]) -> DataFrame:
             F.min("o_orderkey").alias("min_key"),
             F.max("o_orderkey").alias("max_key"),
         )
-        .orderBy("file_name")
     )
 
 
@@ -543,7 +535,6 @@ def op_mom_change(t: dict[str, DataFrame]) -> DataFrame:
                 rnd((F.col("revenue") - prev) / prev * 100.0, 2),
             ),
         )
-        .orderBy("month")
     )
 
 
@@ -616,7 +607,6 @@ def op_zorder(t: dict[str, DataFrame]) -> DataFrame:
             F.min("y").alias("y_min"),
             F.max("y").alias("y_max"),
         )
-        .orderBy("bucket")
     )
 
 
@@ -730,9 +720,7 @@ def op_dq_checks(t: dict[str, DataFrame]) -> DataFrame:
     out = checks[0]
     for c in checks[1:]:
         out = out.unionByName(c)
-    return out.withColumn("passed", (F.col("n_violations") == 0).cast("int")).orderBy(
-        "check"
-    )
+    return out.withColumn("passed", (F.col("n_violations") == 0).cast("int"))
 
 
 ORACLE_DQ_CHECKS = """
@@ -803,7 +791,6 @@ def op_forget_user(t: dict[str, DataFrame]) -> DataFrame:
             F.count(F.when(~doomed, 1)).alias("n_after"),
             F.count_distinct(F.when(doomed, F.col("user_id"))).alias("n_users_purged"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -873,7 +860,7 @@ def op_adaptive_join(t: dict[str, DataFrame]) -> DataFrame:
                 F.sum("user_n").alias("sum_user_n"),
             )
         )
-    return legs[0].unionByName(legs[1]).orderBy("leg")
+    return legs[0].unionByName(legs[1])
 
 
 def _duck_adaptive_leg(leg: str, key_expr: str) -> str:
@@ -956,7 +943,6 @@ def op_histogram_equidepth(t: dict[str, DataFrame]) -> DataFrame:
             rnd(F.max("o_totalprice"), 2).alias("hi"),
             rnd(dsum(F.col("o_totalprice")), 2).alias("sum_price"),
         )
-        .orderBy("bucket")
     )
 
 
@@ -1029,7 +1015,6 @@ def op_column_mask(t: dict[str, DataFrame]) -> DataFrame:
             F.when(F.col("cell_n") >= MASK_K, F.col("band")).alias("band"),
             (F.col("cell_n") < MASK_K).cast("int").alias("suppressed"),
         )
-        .orderBy("c_custkey")
     )
 
 
@@ -1105,7 +1090,6 @@ def op_gap_fill(t: dict[str, DataFrame]) -> DataFrame:
                 4,
             ).alias("filled_mean"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -1175,7 +1159,6 @@ def op_sequence_islands(t: dict[str, DataFrame]) -> DataFrame:
             F.count_distinct("user_id").alias("n_users"),
             (F.count(F.lit(1)) * F.col("island_len")).cast("bigint").alias("total_days"),
         )
-        .orderBy("island_len")
     )
 
 

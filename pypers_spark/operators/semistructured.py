@@ -60,7 +60,6 @@ def op_array_funcs(t: dict[str, DataFrame]) -> DataFrame:
             ).alias("avg_qty"),
             F.size(F.filter("qtys", lambda q: q > 25)).cast("bigint").alias("n_large"),
         )
-        .orderBy("l_orderkey")
     )
 
 
@@ -102,7 +101,6 @@ def op_map_funcs(t: dict[str, DataFrame]) -> DataFrame:
             F.coalesce(F.element_at("status_counts", "O"), F.lit(0)).alias("n_o"),
             F.size("status_counts").cast("bigint").alias("n_statuses"),
         )
-        .orderBy("l_orderkey")
     )
 
 
@@ -131,7 +129,6 @@ def op_unpivot(t: dict[str, DataFrame]) -> DataFrame:
             valueColumnName="val",
         )
         .withColumn("val", rnd(F.col("val").cast("double"), 2))
-        .orderBy("c_custkey", "metric")
     )
 
 

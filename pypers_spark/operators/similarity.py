@@ -95,7 +95,6 @@ def ann_lsh_bucketed(t: dict[str, DataFrame]) -> DataFrame:
         emb.withColumn("bucket", bucket.cast("int"))
         .groupBy("bucket")
         .agg(F.count("*").alias("n_vecs"), F.min("vec_id").alias("min_vec_id"))
-        .orderBy("bucket")
     )
 
 
@@ -155,13 +154,10 @@ def _emb_source(t: dict[str, DataFrame], tau: float) -> DataFrame:
     return emb_with_planted(t) if tau == COS_THRESHOLD else t["embeddings"]
 
 
-def _embedding_cos_pairs_unsorted(t: dict[str, DataFrame], tau: float) -> DataFrame:
-    """Embedding near-dup pairs (cosine ≥ ``tau``) within label blocks,
-    WITHOUT the readout ordering — the form every internal consumer
-    (graph pair caches, connected components, modularity) wants.
-    Caching the SORTED plan made each cache build pay the pairwise-
-    cosine join twice (the range sampler re-executes the sort's child;
-    see functions/barrier.py) plus a sort nobody downstream used.
+def _embedding_cos_pairs(t: dict[str, DataFrame], tau: float) -> DataFrame:
+    """Embedding near-dup pairs (cosine ≥ ``tau``) within label blocks:
+    the declared pair queries and every internal consumer (graph pair
+    caches, connected components, modularity) share this plan.
 
     The per-vector norm is computed ONCE on a persisted projection —
     folding it into the pairwise cosine would re-run the 64-element
@@ -197,16 +193,6 @@ def _embedding_cos_pairs_unsorted(t: dict[str, DataFrame], tau: float) -> DataFr
         .filter(F.col("cos_sim") >= F.lit(tau))
         .select("label", "id_a", "id_b", "cos_sim")
     )
-
-
-def _embedding_cos_pairs(t: dict[str, DataFrame], tau: float) -> DataFrame:
-    """The declared-query form: ordered readout over the unsorted core,
-    with a sort_barrier so the range sampler reads materialized shuffle
-    blocks instead of re-running the pairwise-cosine join."""
-    from pypers_spark.functions.barrier import sort_barrier
-
-    out = _embedding_cos_pairs_unsorted(t, tau)
-    return sort_barrier(out, "id_a").orderBy("label", "id_a", "id_b")
 
 
 def dd_embedding_cos(t: dict[str, DataFrame]) -> DataFrame:
@@ -312,7 +298,6 @@ def ann_range_search(t: dict[str, DataFrame]) -> DataFrame:
             rnd(cosine_similarity(F.col("embedding"), F.col("q_emb")), 4).alias("cos_sim"),
         )
         .filter(F.col("cos_sim") >= RANGE_TAU)
-        .orderBy(F.desc("cos_sim"), "vec_id")
     )
 
 
@@ -573,7 +558,7 @@ def _cluster_on_pairs(t: dict[str, DataFrame], tau: float) -> DataFrame:
     emb = _emb_source(t, tau)
     # Unsorted pair plan: the sorted declared-query form would make the
     # edges persist pay a sampling re-run + sort that CC never needs.
-    pairs = _embedding_cos_pairs_unsorted(t, tau).select("id_a", "id_b")
+    pairs = _embedding_cos_pairs(t, tau).select("id_a", "id_b")
     edges = pairs.unionByName(
         pairs.select(F.col("id_b").alias("id_a"), F.col("id_a").alias("id_b"))
     ).select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
@@ -588,7 +573,6 @@ def _cluster_on_pairs(t: dict[str, DataFrame], tau: float) -> DataFrame:
     return (
         labels.select(F.col("node").alias("vec_id"), F.col("lbl").alias("cluster_id"))
         .withColumn("cluster_size", F.count(F.lit(1)).over(w))
-        .orderBy("vec_id")
     )
 
 
@@ -663,13 +647,7 @@ def dd_semantic_dedup(t: dict[str, DataFrame]) -> DataFrame:
         .filter(F.col("cos_sim") >= F.lit(COS_T03))
         .select("cell", "id_a", "id_b", "cos_sim")
     )
-    # sort_barrier (r12, ADVICE): the C(k,2) within-cell cosine join sat
-    # directly under the rangepartitioning exchange, so the range
-    # sampler re-executed it end to end — the exact double execution
-    # fixed for nine other operators in r11 (functions/barrier.py).
-    from pypers_spark.functions.barrier import sort_barrier
-
-    return sort_barrier(out, "id_a").orderBy("cell", "id_a", "id_b")
+    return out
 
 
 def _oracle_semdedup() -> str:
@@ -840,7 +818,6 @@ def ann_pq(t: dict[str, DataFrame]) -> DataFrame:
             F.sum(F.col("cid") * F.element_at(radix, F.col("m") + 1)).alias("pq_code"),
             rnd(dsum(F.col("d2")), 4).alias("recon_d2"),
         )
-        .orderBy("vec_id")
     )
 
 
@@ -1138,14 +1115,7 @@ def ann_knn_graph(t: dict[str, DataFrame]) -> DataFrame:
         .filter(F.col("rank") <= KNN_K)
         .select("vec_id", "rank", "nbr_id", "cos_sim", "label")
     )
-    # sort_barrier (r12, sampler-audit extension): the top-k window sat
-    # directly under the final range sort, so the sampling pass re-ran
-    # the per-vector sort over the full block-pair stream; the barrier
-    # materializes the n·K readout once (measured 2.72 -> 2.38s solo
-    # best-of-5 at sf0.1).
-    from pypers_spark.functions.barrier import sort_barrier
-
-    return sort_barrier(out, "vec_id").orderBy("vec_id", "rank")
+    return out
 
 
 ORACLE_ANN_KNN_GRAPH = f"""
@@ -1220,7 +1190,6 @@ def ann_recall_report(t: dict[str, DataFrame]) -> DataFrame:
             "n_hits",
             rnd(F.col("n_hits") / F.lit(float(TOP_K)), 4).alias("recall_at_k"),
         )
-        .orderBy("method")
     )
 
 
@@ -1291,7 +1260,6 @@ def ann_batch_topk(t: dict[str, DataFrame]) -> DataFrame:
         cands.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= BATCH_TOP_K)
         .select("query_id", "rank", "vec_id", "cos_sim")
-        .orderBy("query_id", "rank")
     )
 
 
@@ -1375,7 +1343,6 @@ def ann_filtered_topk(t: dict[str, DataFrame]) -> DataFrame:
     return (
         pre.unionByName(post)
         .select("strategy", "k_returned", "min_cos", "max_cos")
-        .orderBy("strategy")
     )
 
 
@@ -1617,7 +1584,6 @@ def ann_knn_graph_cells(t: dict[str, DataFrame]) -> DataFrame:
         pairs.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= KNN_K)
         .select("vec_id", "rank", "nbr_id", "cos_sim", "cell")
-        .orderBy("vec_id", "rank")
     )
 
 
@@ -1744,7 +1710,6 @@ def ann_graph_search(t: dict[str, DataFrame]) -> DataFrame:
     return (
         last.filter(F.col("rn") <= GS_TOPK)
         .select("q_id", F.col("rn").cast("int").alias("rank"), "node_id", "cos_sim")
-        .orderBy("q_id", "rank")
     )
 
 
@@ -2096,9 +2061,10 @@ def pipe_ann(t: dict[str, DataFrame]) -> DataFrame:
 
         def process(self, pipeline, config, status=None, **inputs):
             from pypers_spark.session import current_session
+            from pypers_spark.sources.io import read_parquet
 
             spark = current_session()
-            df = spark.read.parquet(f'{config["sf_dir"]}/embeddings.parquet')
+            df = read_parquet(spark, f'{config["sf_dir"]}/embeddings.parquet')
             n = int(spark.conf.get("spark.sql.shuffle.partitions"))
             return {"emb": df.repartition(n, F.col("vec_id"))}
 
@@ -2196,7 +2162,7 @@ def pipe_ann(t: dict[str, DataFrame]) -> DataFrame:
     pipeline = create_pipeline([Ingest(), BuildIndex(), Serve(), Report()])
     config = Config({"ingest": {"sf_dir": t._sf_dir}})
     data, _, _ = pipeline.process(input_id=1, config=config)
-    return data["report"].orderBy("cell")
+    return data["report"]
 
 
 ORACLE_PIPE_ANN = f"""

@@ -227,7 +227,6 @@ def sk_cms_heavy(t: dict[str, DataFrame]) -> DataFrame:
         .groupBy("gram")
         .agg(F.max("exact").alias("exact"), F.min("cell_cnt").alias("est"))
         .withColumn("overest", F.col("est") - F.col("exact"))
-        .orderBy(F.desc("exact"), "gram")
     )
 
 
@@ -532,7 +531,7 @@ def sk_hist_quantile(t: dict[str, DataFrame]) -> DataFrame:
         rnd(est, 4).alias("est"),
         exact.alias("exact"),
         rnd(F.abs(rnd(est, 4) - exact) / exact, 6).alias("rel_err"),
-    ).orderBy("q")
+    )
 
 
 _DUCK_HQ_EST = f"""
@@ -684,7 +683,6 @@ def sk_join_cardinality(t: dict[str, DataFrame]) -> DataFrame:
             "exact_card",
             (F.col("est_card") - F.col("exact_card")).alias("overest"),
         )
-        .orderBy("d")
     )
 
 
@@ -817,7 +815,6 @@ def sk_hll_grouped(t: dict[str, DataFrame]) -> DataFrame:
                 F.abs(est - F.col("n_exact").cast("double")) / F.col("n_exact"), 6
             ).alias("rel_err"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -1149,7 +1146,6 @@ def sk_moments(t: dict[str, DataFrame]) -> DataFrame:
             ).alias("skewness"),
             F.when(var > 0, rnd(m4 / (var * var) - 3, 4)).alias("kurtosis"),
         )
-        .orderBy("event_type")
     )
 
 

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pypers_spark.functions.rounding import dsum, duck_dsum, duck_rnd, rnd
+from pypers_spark.sources.io import read_parquet
 
 QUERIES: dict = {}
 ORACLES: dict = {}
@@ -64,7 +65,7 @@ def st_tumbling_counts(t: dict[str, DataFrame]) -> DataFrame:
         .start()
     )
     q.awaitTermination()
-    return spark.table(name).orderBy("hour_start", "event_type")
+    return spark.table(name)
 
 
 ORACLE_ST_TUMBLING = f"""
@@ -111,7 +112,6 @@ def st_session_counts(t: dict[str, DataFrame]) -> DataFrame:
         spark.table(name)
         .filter(F.col("closed_by") == "gap")
         .select("user_id", "session_start", "session_end", "n_events")
-        .orderBy("user_id", "session_start")
     )
 
 
@@ -174,7 +174,7 @@ def st_stream_dedup(t: dict[str, DataFrame]) -> DataFrame:
         .start()
     )
     q.awaitTermination()
-    return spark.table(name).orderBy("user_id", "event_type", "ts")
+    return spark.table(name)
 
 
 ORACLE_ST_DEDUP = """
@@ -218,7 +218,6 @@ def st_interval_join(t: dict[str, DataFrame]) -> DataFrame:
             "user_id", "purchase_id", "purchase_ts", "purchase_value",
             "view_id", "view_ts",
         )
-        .orderBy("user_id", "purchase_id", "view_id")
     )
 
 
@@ -274,7 +273,7 @@ def st_sliding_counts(t: dict[str, DataFrame]) -> DataFrame:
         .start()
     )
     q.awaitTermination()
-    return spark.table(name).orderBy("win_start")
+    return spark.table(name)
 
 
 # Each event belongs to the two 1-h windows whose starts are its 30-min
@@ -338,9 +337,8 @@ def st_upsert_drain(t: dict[str, DataFrame]) -> DataFrame:
             .limit(0)
         )
     result = (
-        spark.read.parquet(out)
+        read_parquet(spark, out)
         .select("event_id", "user_id", rnd(F.col("value"), 2).alias("value"))
-        .orderBy("event_id")
     )
     # Materialize before the temp dir goes away — the gate collects
     # anyway; localCheckpoint pins the rows so cleanup is safe.
@@ -464,9 +462,8 @@ def st_restart_upsert(t: dict[str, DataFrame]) -> DataFrame:
             .limit(0)
         )
     result = (
-        spark.read.parquet(out)
+        read_parquet(spark, out)
         .select("event_id", "user_id", rnd(F.col("value"), 2).alias("value"))
-        .orderBy("event_id")
     )
     result = result.localCheckpoint(eager=True)
     shutil.rmtree(base, ignore_errors=True)
@@ -515,7 +512,7 @@ def st_hll_registers(t: dict[str, DataFrame]) -> DataFrame:
         .start()
     )
     q.awaitTermination()
-    return spark.table(name).orderBy("bucket")
+    return spark.table(name)
 
 
 def _oracle_st_hll() -> str:
@@ -571,7 +568,7 @@ def st_cms_cells(t: dict[str, DataFrame]) -> DataFrame:
         .start()
     )
     q.awaitTermination()
-    return spark.table(name).orderBy("d", "bucket")
+    return spark.table(name)
 
 
 def _oracle_st_cms() -> str:
@@ -727,7 +724,7 @@ def st_late_data(t: dict[str, DataFrame]) -> DataFrame:
         .start()
     )
     q.awaitTermination()
-    out = spark.table(name).orderBy("hour_start", "event_type").localCheckpoint()
+    out = spark.table(name).localCheckpoint()
     shutil.rmtree(base, ignore_errors=True)
     return out
 
@@ -873,7 +870,6 @@ def st_outer_join(t: dict[str, DataFrame]) -> DataFrame:
         spark.table(name)
         .select("user_id", "purchase_id", "purchase_ts", "purchase_value",
                 "view_id", "view_ts")
-        .orderBy("user_id", "purchase_id", "view_id")
         .localCheckpoint()
     )
     shutil.rmtree(base, ignore_errors=True)

@@ -11,7 +11,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pypers_spark.functions.barrier import sort_barrier
 from pypers_spark.functions.rounding import dsum, duck_dsum, duck_rnd, rnd
 from pypers_spark.multimodal import (
     GIF_H_BASE,
@@ -68,7 +67,7 @@ def txt_token_count(t: dict[str, DataFrame]) -> DataFrame:
         F.size(tokenize_ws(F.col("text"))).cast("bigint").alias("n_ws_tokens"),
         F.size(tokenize_bpeish(F.col("text"))).cast("bigint").alias("n_bpeish_tokens"),
         F.length(F.col("text")).cast("bigint").alias("n_chars_actual"),
-    ).orderBy("doc_id")
+    )
 
 
 ORACLE_TOKEN_COUNT = f"""
@@ -107,7 +106,7 @@ def txt_quality(t: dict[str, DataFrame]) -> DataFrame:
         rnd(F.col("s"), 4).alias("stopword_ratio"),
         rnd(F.col("u"), 4).alias("upper_ratio"),
         rnd(quality, 4).alias("quality"),
-    ).orderBy("doc_id")
+    )
 
 
 ORACLE_QUALITY = f"""
@@ -138,7 +137,6 @@ def txt_langid(t: dict[str, DataFrame]) -> DataFrame:
         d.withColumn("pred_lang", pred)
         .groupBy("lang", "pred_lang")
         .agg(F.count("*").alias("n_docs"))
-        .orderBy("lang", "pred_lang")
     )
 
 
@@ -169,7 +167,7 @@ def txt_fingerprint(t: dict[str, DataFrame]) -> DataFrame:
         F.md5(norm).alias("fp_full"),
         F.md5(bag).alias("fp_bag"),
         F.md5(F.substring(norm, 1, 64)).alias("fp_prefix"),
-    ).orderBy("doc_id")
+    )
 
 
 ORACLE_FINGERPRINT = f"""
@@ -195,7 +193,7 @@ def mm_binary_meta(t: dict[str, DataFrame]) -> DataFrame:
         F.md5(F.col("text")).alias("content_md5"),
         F.col("source").alias("media_source"),
         F.lit("text/plain").alias("mime_type"),
-    ).orderBy("doc_id")
+    )
 
 
 ORACLE_MM_BINARY = """
@@ -235,7 +233,6 @@ def mm_features_hist(t: dict[str, DataFrame]) -> DataFrame:
             F.col("dim").cast("bigint").alias("dim"),
             rnd(F.col("v"), 4).alias("v"),
         )
-        .orderBy("media_id", "dim")
     )
 
 
@@ -290,7 +287,7 @@ def mm_decode_meta(t: dict[str, DataFrame]) -> DataFrame:
     )
     return decoded.select(
         "media_id", "width", "height", "n_channels", "content_sha"
-    ).orderBy("media_id")
+    )
 
 
 # Rebuilds the exact P6 payload with string arithmetic: header
@@ -344,7 +341,7 @@ def mm_gif_meta(t: dict[str, DataFrame]) -> DataFrame:
     )
     return decoded.select(
         "media_id", "width", "height", "n_channels", "content_sha"
-    ).orderBy("media_id")
+    )
 
 
 # The oracle rebuilds the EXPECTED DECODE OUTPUT (not the payload):
@@ -409,7 +406,7 @@ def mm_png_meta(t: dict[str, DataFrame]) -> DataFrame:
     )
     return decoded.select(
         "media_id", "width", "height", "n_channels", "content_sha"
-    ).orderBy("media_id")
+    )
 
 
 # Oracle rebuilds the EXPECTED DECODE OUTPUT from the PNG_* doc_id
@@ -457,11 +454,7 @@ def mm_resize_meta(t: dict[str, DataFrame]) -> DataFrame:
         F.col("n_bytes").cast("bigint").alias("n_bytes"),
         F.md5("payload").alias("payload_md5"),
     )
-    # sort_barrier: the resize mapInPandas is opaque to column pruning,
-    # so the final sort's sampling pass would re-run the whole decode/
-    # box-filter/re-encode per query; only skinny stats rows cross the
-    # barrier exchange (payloads are consumed by the md5 above).
-    return sort_barrier(out, "media_id").orderBy("media_id")
+    return out
 
 
 # Output index k (0-based, row-major rows x cols x 3 channels):
@@ -525,10 +518,7 @@ def mm_frame_sample(t: dict[str, DataFrame]) -> DataFrame:
         F.octet_length("frame_payload").cast("bigint").alias("frame_len"),
         F.md5("frame_payload").alias("frame_md5"),
     )
-    # sort_barrier: same rationale as mm_resize_meta — the frame
-    # fan-out mapInPandas is opaque, so the sort sampler would re-run
-    # it; only (id, idx, len, md5) rows cross the barrier.
-    return sort_barrier(out, "media_id").orderBy("media_id", "frame_idx")
+    return out
 
 
 ORACLE_MM_FRAMES = """
@@ -560,7 +550,6 @@ def txt_source_stats(t: dict[str, DataFrame]) -> DataFrame:
             F.sum("n_chars").alias("total_chars"),
             rnd(F.sum("n_chars").cast("double") / F.count(F.lit(1)), 4).alias("avg_chars"),
         )
-        .orderBy("source", "lang")
     )
 
 
@@ -604,7 +593,6 @@ def mm_audio_meta(t: dict[str, DataFrame]) -> DataFrame:
             F.sum("n_frames").alias("total_frames"),
             rnd(dsum(duration), 4).alias("total_seconds"),
         )
-        .orderBy("sample_rate", "n_channels", "bits_per_sample")
     )
 
 
@@ -712,7 +700,6 @@ def txt_quality_prune(t: dict[str, DataFrame]) -> DataFrame:
             "n_kept",
             rnd(F.col("n_kept").cast("double") / F.col("n_docs"), 4).alias("kept_frac"),
         )
-        .orderBy("source")
     )
 
 
@@ -782,7 +769,6 @@ def mm_chunk_bytes(t: dict[str, DataFrame]) -> DataFrame:
             F.octet_length(chunk).alias("n_chunk_bytes"),
             F.md5(chunk).alias("chunk_md5"),
         )
-        .orderBy("doc_id", "chunk_idx")
     )
 
 
@@ -827,7 +813,6 @@ def mm_image_phash(t: dict[str, DataFrame]) -> DataFrame:
     return (
         ph.withColumn("n_same", F.count("*").over(w).cast("bigint"))
         .select("media_id", "width", "height", "phash", "n_same")
-        .orderBy("media_id")
     )
 
 
@@ -1081,11 +1066,7 @@ def mm_phash_pairs(t: dict[str, DataFrame]) -> DataFrame:
             "hamming",
         )
     )
-    # sort_barrier: both union branches end in joins over the cached
-    # hash table; the range sampler would re-run them (barrier.py).
-    return sort_barrier(within.unionByName(cross), "id_a").orderBy(
-        "id_a", "id_b"
-    )
+    return within.unionByName(cross)
 
 
 def _php_duck_nib(col: str, i: int) -> str:
@@ -1182,7 +1163,6 @@ def mm_phash_bucket_stats(t: dict[str, DataFrame]) -> DataFrame:
             "n_dropped_hashes",
             "n_collapsed",
         )
-        .orderBy("band")
     )
 
 
@@ -1257,7 +1237,7 @@ def mm_audio_energy(t: dict[str, DataFrame]) -> DataFrame:
             ),
             6,
         ).alias("rms"),
-    ).orderBy("media_id")
+    )
 
 
 def _oracle_mm_audio_energy() -> str:
@@ -1366,7 +1346,6 @@ def mm_scene_cut(t: dict[str, DataFrame]) -> DataFrame:
             F.count(F.lit(1)).alias("n_media"),
             F.sum("max_jump").cast("bigint").alias("sum_max_jump"),
         )
-        .orderBy("n_cuts")
     )
 
 
@@ -1437,7 +1416,7 @@ def mm_audio_vad(t: dict[str, DataFrame]) -> DataFrame:
         t["documents"].sparkSession.conf.get("spark.sql.shuffle.partitions")
     )
     media = wav_media_table(t["documents"]).repartition(n_part, F.col("media_id"))
-    return audio_vad(media).orderBy("media_id")
+    return audio_vad(media)
 
 
 def _oracle_mm_audio_vad() -> str:

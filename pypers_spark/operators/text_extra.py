@@ -98,7 +98,6 @@ def txt_tfidf_top(t: dict[str, DataFrame]) -> DataFrame:
             "r.df",
             rnd(F.col("r.score"), 4).alias("score"),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -154,7 +153,6 @@ def txt_lexical_diversity(t: dict[str, DataFrame]) -> DataFrame:
             rnd(F.min("ttr"), 4).alias("min_ttr"),
             rnd(F.max("ttr"), 4).alias("max_ttr"),
         )
-        .orderBy("source")
     )
 
 
@@ -238,7 +236,7 @@ def txt_repetition_filter(t: dict[str, DataFrame]) -> DataFrame:
         rnd(F.col("dup2"), 4).alias("dup_2gram_frac"),
         rnd(F.col("top_frac"), 4).alias("top_token_frac"),
         keep.alias("keep"),
-    ).orderBy("doc_id")
+    )
 
 
 _DUCK_G2 = (
@@ -399,7 +397,7 @@ def txt_readability(t: dict[str, DataFrame]) -> DataFrame:
         rnd(asl, 4).alias("avg_sentence_len"),
         rnd(awl, 4).alias("avg_word_len"),
         rnd(0.4 * asl + 5.0 * awl, 4).alias("difficulty"),
-    ).orderBy("doc_id")
+    )
 
 
 ORACLE_READABILITY = f"""
@@ -476,7 +474,7 @@ def txt_pii_scrub(t: dict[str, DataFrame]) -> DataFrame:
         pii_count(raw, "phone").alias("n_phone"),
         pii_count(raw, "ipv4").alias("n_ipv4"),
         md5_hex(scrub_pii(raw)).alias("scrubbed_md5"),
-    ).orderBy("doc_id")
+    )
 
 
 def _oracle_pii_scrub() -> str:
@@ -748,7 +746,6 @@ def txt_boilerplate_scrub(t: dict[str, DataFrame]) -> DataFrame:
                 6,
             ).alias("removal_ratio"),
         )
-        .orderBy("source")
     )
 
 

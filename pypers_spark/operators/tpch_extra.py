@@ -48,7 +48,6 @@ def q4_priority_check(t: dict[str, DataFrame]) -> DataFrame:
     return (
         late_orders.groupBy("o_orderpriority")
         .agg(F.count("*").alias("order_count"))
-        .orderBy("o_orderpriority")
     )
 
 
@@ -87,7 +86,6 @@ def q7_nation_volume(t: dict[str, DataFrame]) -> DataFrame:
         .withColumn("l_year", F.year("l_shipdate").cast("bigint"))
         .groupBy("supp_nation", "cust_nation", "l_year")
         .agg(rnd(dsum(_rev()), 2).alias("revenue"))
-        .orderBy("supp_nation", "cust_nation", "l_year")
     )
 
 
@@ -131,7 +129,6 @@ def q8_market_share(t: dict[str, DataFrame]) -> DataFrame:
         .agg(
             rnd(dsum(F.col("nation_volume")) / dsum(F.col("volume")), 4).alias("mkt_share")
         )
-        .orderBy("o_year")
     )
 
 
@@ -168,7 +165,6 @@ def q9_profit_rollup(t: dict[str, DataFrame]) -> DataFrame:
         .withColumn("o_year", F.year("o_orderdate").cast("bigint"))
         .groupBy(F.col("n_name").alias("nation"), F.col("o_year"))
         .agg(rnd(dsum(profit), 2).alias("sum_profit"))
-        .orderBy("nation", F.desc("o_year"))
     )
 
 
@@ -205,7 +201,6 @@ def q13_custdist(t: dict[str, DataFrame]) -> DataFrame:
         .withColumn("c_count", F.coalesce(F.col("c_count"), F.lit(0)))
         .groupBy("c_count")
         .agg(F.count("*").alias("custdist"))
-        .orderBy(F.desc("custdist"), F.desc("c_count"))
     )
 
 
@@ -265,7 +260,6 @@ def q15_top_supplier(t: dict[str, DataFrame]) -> DataFrame:
     return (
         top.join(F.broadcast(t["supplier"]), F.col("l_suppkey") == F.col("s_suppkey"))
         .select("s_suppkey", "s_name", "total_revenue")
-        .orderBy("s_suppkey")
     )
 
 
@@ -369,7 +363,6 @@ def q22_sales_opportunity(t: dict[str, DataFrame]) -> DataFrame:
             F.count("*").alias("numcust"),
             rnd(dsum(F.col("c_acctbal")), 2).alias("totacctbal"),
         )
-        .orderBy("c_nationkey")
     )
 
 

@@ -69,7 +69,6 @@ def q2_min_cost_supplier(t: dict[str, DataFrame]) -> DataFrame:
         cand.withColumn("min_cost", F.min("supply_cost").over(w))
         .filter(F.col("supply_cost") == F.col("min_cost"))
         .select("s_acctbal", "s_name", "n_name", "p_partkey", "p_name", "supply_cost")
-        .orderBy(F.desc("s_acctbal"), "n_name", "s_name", "p_partkey")
     )
 
 
@@ -117,7 +116,6 @@ def q11_important_stock(t: dict[str, DataFrame]) -> DataFrame:
         per_part.crossJoin(F.broadcast(total))
         .filter(F.col("part_value") > F.col("threshold"))
         .select("l_partkey", rnd(F.col("part_value"), 2).alias("part_value"))
-        .orderBy(F.desc("part_value"), "l_partkey")
     )
 
 
@@ -159,7 +157,6 @@ def q12_late_lines(t: dict[str, DataFrame]) -> DataFrame:
             F.sum(F.when(high, 1).otherwise(0)).alias("high_line_count"),
             F.sum(F.when(high, 0).otherwise(1)).alias("low_line_count"),
         )
-        .orderBy("ship_class")
     )
 
 
@@ -199,7 +196,6 @@ def q16_supplier_cnt(t: dict[str, DataFrame]) -> DataFrame:
         .join(F.broadcast(parts), F.col("l_partkey") == F.col("p_partkey"))
         .groupBy("p_brand", "p_type", "p_size")
         .agg(F.count_distinct(F.col("l_suppkey")).alias("supplier_cnt"))
-        .orderBy(F.desc("supplier_cnt"), "p_brand", "p_type", "p_size")
     )
 
 
@@ -248,7 +244,6 @@ def q20_dominant_supplier(t: dict[str, DataFrame]) -> DataFrame:
         .join(F.broadcast(nat2), F.col("s_nationkey") == F.col("n_nationkey"))
         .join(dominant, F.col("s_suppkey") == F.col("l_suppkey"), "leftsemi")
         .select("s_suppkey", "s_name")
-        .orderBy("s_suppkey")
     )
 
 
@@ -329,7 +324,6 @@ def q21_waiting_supplier(t: dict[str, DataFrame]) -> DataFrame:
         flagged.join(F.broadcast(supp), F.col("l_suppkey") == F.col("s_suppkey"))
         .groupBy("s_name")
         .agg(F.sum("late_lines").alias("numwait"))
-        .orderBy(F.desc("numwait"), "s_name")
     )
 
 

@@ -87,7 +87,6 @@ def txt_chunk(t: dict[str, DataFrame]) -> DataFrame:
             F.size(chunk).alias("n_chunk_tokens"),
             F.md5(F.concat_ws(" ", chunk)).alias("chunk_md5"),
         )
-        .orderBy("doc_id", "chunk_idx")
     )
 
 
@@ -159,7 +158,6 @@ def txt_clf_score(t: dict[str, DataFrame]) -> DataFrame:
         .withColumn(
             "quality_label", (F.col("clf_score") >= 0).cast("int")
         )
-        .orderBy("doc_id")
     )
 
 
@@ -254,7 +252,6 @@ def txt_mix_apply(t: dict[str, DataFrame]) -> DataFrame:
                 6,
             ).alias("achieved_share"),
         )
-        .orderBy("lang")
     )
 
 
@@ -343,7 +340,6 @@ def txt_split_holdout(t: dict[str, DataFrame]) -> DataFrame:
             F.sum("n_chars").alias("n_chars"),
             F.sum("n_tok").alias("n_tokens"),
         )
-        .orderBy("source", "split")
     )
 
 
@@ -382,9 +378,10 @@ class IngestTrainDocs(Stage):
 
     def process(self, pipeline, config, status=None, **inputs):
         from pypers_spark.session import current_session
+        from pypers_spark.sources.io import read_parquet
 
         spark = current_session()
-        df = spark.read.parquet(f'{config["sf_dir"]}/documents.parquet')
+        df = read_parquet(spark, f'{config["sf_dir"]}/documents.parquet')
         n = int(spark.conf.get("spark.sql.shuffle.partitions"))
         return {"docs": df.repartition(n, F.col("doc_id"))}
 
@@ -499,7 +496,7 @@ def pipe_training(t) -> DataFrame:
     )
     config = Config({"ingest-train-docs": {"sf_dir": t._sf_dir}})
     data, _, _ = pipeline.process(input_id=1, config=config)
-    return data["stats"].orderBy("source")
+    return data["stats"]
 
 
 def _duck_pipe_training_sql() -> str:
@@ -599,7 +596,6 @@ def txt_pack_sequences(t: dict[str, DataFrame]) -> DataFrame:
                 6,
             ).alias("packing_efficiency"),
         )
-        .orderBy("shard")
     )
 
 
@@ -689,7 +685,6 @@ def txt_curriculum_stages(t: dict[str, DataFrame]) -> DataFrame:
             rnd(F.min("score"), 6).alias("min_score"),
             rnd(F.max("score"), 6).alias("max_score"),
         )
-        .orderBy("stage")
     )
 
 
@@ -793,7 +788,6 @@ def _chunk_dup_readout(chunks: DataFrame) -> DataFrame:
             "n_in_dup_groups",
             (F.col("n_chunks") - F.col("n_unique")).alias("n_removable"),
         )
-        .orderBy("source")
     )
 
 
@@ -871,7 +865,6 @@ def txt_split_leakage(t: dict[str, DataFrame]) -> DataFrame:
             F.sum("n_docs").alias("n_docs"),
         )
         .withColumn("leaked", F.col("splits").contains("+"))
-        .orderBy("splits")
     )
 
 

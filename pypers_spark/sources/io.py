@@ -9,6 +9,7 @@ downstream reads get partition pruning.
 
 from __future__ import annotations
 
+import os
 from typing import Iterable, Optional
 
 from pyspark.sql import DataFrame, SparkSession
@@ -54,8 +55,67 @@ def write_json(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     df.write.mode(mode).json(path)
 
 
+# Session confs that change what parquet schema inference returns.
+_SCHEMA_CONFS = (
+    "spark.sql.caseSensitive",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.parquet.respectSummaryFiles",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+)
+
+# (absolute path, conf values) -> (listing, inferred schema). One entry
+# per path and confs: a rewritten table replaces its entry.
+_SCHEMAS: dict[tuple, tuple[tuple, StructType]] = {}
+
+
+def _listing(path: str) -> Optional[tuple]:
+    """(relative name, size, mtime) of every file under a local ``path``;
+    None when the path is not on the local file system (a URI, a glob,
+    a missing path)."""
+    try:
+        if os.path.isfile(path):
+            st = os.stat(path)
+            return ((os.path.basename(path), st.st_size, st.st_mtime_ns),)
+        if not os.path.isdir(path):
+            return None
+        out = []
+        for root, _, files in os.walk(path):
+            for name in files:
+                full = os.path.join(root, name)
+                st = os.stat(full)
+                out.append((os.path.relpath(full, path), st.st_size, st.st_mtime_ns))
+        return tuple(sorted(out))
+    except OSError:
+        return None
+
+
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
+    """Lazy parquet scan; every parquet table the package opens goes
+    through here.
+
+    Schema inference launches a Spark job (a footer read) on every
+    ``spark.read.parquet``. The inferred schema is remembered per
+    process, keyed by the path, its file listing (name, size, mtime)
+    and the parquet-reading confs, so reopening an unchanged table is
+    ``spark.read.schema(s).parquet(path)`` and launches no job. A
+    rewritten table, or a changed conf such as
+    ``spark.sql.legacy.parquet.nanosAsLong``, is inferred afresh. A
+    path that cannot be listed locally is always inferred.
+    """
+    listing = _listing(path)
+    if listing is None:
+        return spark.read.parquet(path)
+    key = (os.path.abspath(path), tuple(spark.conf.get(c, None) for c in _SCHEMA_CONFS))
+    hit = _SCHEMAS.get(key)
+    if hit is not None and hit[0] == listing:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[key] = (listing, df.schema)
+    return df
 
 
 def read_orc(spark: SparkSession, path: str) -> DataFrame:

@@ -1,8 +1,9 @@
 """Table registry over the driver-generated parquet test tables.
 
 At 100 TB the same entry points apply: ``load_table`` is a lazy
-``spark.read.parquet`` scan, so partition pruning / predicate pushdown /
-column pruning all reach the file source; nothing is materialized here.
+parquet scan (``io.read_parquet``), so partition pruning / predicate
+pushdown / column pruning all reach the file source; nothing is
+materialized here.
 """
 
 from __future__ import annotations
@@ -10,6 +11,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+
+from pypers_spark.sources.io import read_parquet
 
 TABLES = (
     "region",
@@ -36,6 +39,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     with exact integer division (matching DuckDB's ns→µs truncation).
     Session timezone is pinned to UTC so timestamp semantics (date_trunc,
     LTZ rendering) are deterministic regardless of the host session.
+    A reopen in the same process reuses the inferred schema
+    (``io.read_parquet``) and launches no Spark job.
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     path = os.path.join(sf_dir, f"{name}.parquet")
@@ -44,13 +49,13 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         from pyspark.sql.types import LongType
 
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
+        df = read_parquet(spark, path)
         # Only ns-timestamp files surface ts as long; standard µs files
         # (any non-driver events source) pass through unchanged.
         if isinstance(df.schema["ts"].dataType, LongType):
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         return df
-    return spark.read.parquet(path)
+    return read_parquet(spark, path)
 
 
 class LazyTables(dict):

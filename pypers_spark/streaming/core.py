@@ -26,6 +26,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from pypers_spark.sources.io import read_parquet
+
 
 def stream_events(
     spark: SparkSession,
@@ -44,7 +46,7 @@ def stream_events(
         # nanosAsLong conf) — conversion happens on the stream below,
         # mirroring sources.registry.load_table.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+        schema = read_parquet(spark, f"{sf_dir}/events.parquet").schema
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", max_files_per_trigger)
@@ -310,7 +312,7 @@ def streaming_upsert_parquet(
             latest.select("_pk").distinct().filter(F.col("_pk") >= 0)
         )
         return (
-            spark.read.parquet(table_path)
+            read_parquet(spark, table_path)
             .join(touched, "_pk", "left_semi")  # DPP-pruned scan
             .join(latest.select(*key_cols), key_cols, "left_anti")
         )

@@ -106,6 +106,48 @@ def _is_dataframe(value: Any) -> bool:
     return isinstance(value, (DataFrame, ConnectDataFrame))
 
 
+def _write_fields(frames: Dict[str, Any]) -> None:
+    """Write each ``field -> (DataFrame, path)`` as parquet, running a
+    shared upstream once.
+
+    A field that another field of the chunk is built on (the cache
+    manager answers part of the other's plan from it) is written first,
+    from a cache: its own if it already has one (a ``tracked_persist``
+    memo), else a MEMORY_AND_DISK persist made here and released when
+    the writes are done. Without it, writing ``lang_stats =
+    curated.groupBy(...)`` re-executes the curation plan the ``curated``
+    write just ran.
+    """
+    from pyspark.storagelevel import StorageLevel
+
+    from pypers_spark.functions.caching import cached_relation, reads_cache
+
+    shared: List[str] = []
+    persisted = []
+    try:
+        classic = {f: df for f, (df, _) in frames.items() if hasattr(df, "_jdf")}
+        for field, df in classic.items():
+            others = [other for f, other in classic.items() if f != field]
+            if not others:
+                continue
+            relation = cached_relation(df)
+            mine = relation is None
+            if mine:
+                df.persist(StorageLevel.MEMORY_AND_DISK)
+                persisted.append(df)
+                relation = cached_relation(df)
+            if any(reads_cache(other, relation) for other in others):
+                shared.append(field)
+            elif mine:
+                persisted.pop().unpersist()
+        for field in dict.fromkeys(shared + list(frames)):
+            df, target = frames[field]
+            df.write.mode("overwrite").parquet(target)
+    finally:
+        for df in persisted:
+            df.unpersist()
+
+
 class Task:
     """A node of the task tree: spec + directory + parent."""
 
@@ -292,26 +334,34 @@ class Task:
         DataFrame fields trigger their (single) execution here — this is
         the pipeline's one materialization point. Scalar fields land in
         a JSON sidecar.
+
+        Crash-consistent: the digests are removed before the first write
+        and written back only after every field, the scalars and the
+        stale-field removal, so a store that dies midway leaves the task
+        pending (``is_pending`` != "") even if its config is reverted.
         """
         assert self.runnable
         assert frozenset(data.keys()) == frozenset(self.input_ids)
+        for fp in (self.digest_sha_filepath, self.digest_task_filepath):
+            fp.unlink(missing_ok=True)
         for input_id, chunk in data.items():
             chunk = self.strip_marginals(pipeline, chunk)
             input_dir = self._input_dir(input_id)
             input_dir.mkdir(parents=True, exist_ok=True)
             scalars = {}
+            frames = {}
             for field, value in chunk.items():
-                if _is_dataframe(value):
-                    target = str(input_dir / f"{field}.parquet")
-                    # A field re-loaded from this very path (pickup from
-                    # self, no diverging stage) must not be rewritten:
-                    # overwriting a parquet path from a lazy scan of
-                    # itself deletes the input mid-read.
-                    if getattr(value, "_pypers_loaded_from", None) == target:
-                        continue
-                    value.write.mode("overwrite").parquet(target)
-                else:
+                if not _is_dataframe(value):
                     scalars[field] = value
+                    continue
+                target = str(input_dir / f"{field}.parquet")
+                # A field re-loaded from this very path (pickup from
+                # self, no diverging stage) must not be rewritten:
+                # overwriting a parquet path from a lazy scan of
+                # itself deletes the input mid-read.
+                if getattr(value, "_pypers_loaded_from", None) != target:
+                    frames[field] = (value, target)
+            _write_fields(frames)
             try:
                 scalars_json = json.dumps(scalars)
             except TypeError as exc:
@@ -354,6 +404,7 @@ class Task:
     def load(self, pipeline: Optional[Pipeline] = None) -> TaskData:
         """Re-open persisted results as lazy parquet scans (plus scalars)."""
         from pypers_spark.session import current_session
+        from pypers_spark.sources.io import read_parquet
 
         assert self.runnable
         assert self.data_dirpath.is_dir(), f"no stored data at {self.data_dirpath}"
@@ -364,7 +415,7 @@ class Task:
             assert input_dir.is_dir(), "Loaded data is inconsistent with task specification."
             chunk: PipelineData = json.loads((input_dir / "scalars.json").read_text())
             for parquet in sorted(input_dir.glob("*.parquet")):
-                df = spark.read.parquet(str(parquet))
+                df = read_parquet(spark, str(parquet))
                 df._pypers_loaded_from = str(parquet)
                 chunk[parquet.stem] = df
             data[input_id] = chunk

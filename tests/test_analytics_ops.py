@@ -31,7 +31,7 @@ def test_gate_parity(spark, duck, sf_dir, key):
 
 
 def test_survival_monotone_nonincreasing(tables):
-    rows = A.ev_survival_km(tables).collect()
+    rows = sorted(A.ev_survival_km(tables).collect(), key=lambda r: r["duration_h"])
     assert rows, "KM table must be non-empty"
     surv = [r["survival"] for r in rows]
     assert all(a >= b for a, b in zip(surv, surv[1:]))

@@ -410,36 +410,61 @@ def test_lsh_minhash_table_checkpointed(spark, sf_dir):
     assert "dedup.minhash_" in explained
 
 
-def test_sort_barrier_survives_elision(spark, sf_dir):
-    """functions/barrier.py: the pre-sort materializing exchange must
-    SURVIVE optimization. A plain same-key repartition is elided when
-    the chain below already carries hash(col) partitioning (that is how
-    txt_winnowing's earlier fix silently regressed to a double
-    execution); the xxhash64-keyed exchange cannot be proven redundant.
-    Gate: a hashpartitioning(xxhash64(...)) exchange sits between the
-    chain and the final range sort."""
-    for key in ("txt_winnowing", "dd_containment_idx", "dd_ngram_jaccard_lsh"):
-        plan = plan_of(spark, sf_dir, key)
-        # the barrier EXCHANGE must appear below the range sort's
-        # exchange — "xxhash64" alone would stay green if a future
-        # xxhash64 projection survived while the exchange was elided
-        # (ADVICE r11).
-        pre, _, post = plan.partition("rangepartitioning")
-        assert "hashpartitioning(xxhash64" in post, key
+# Registry keys allowed a range exchange outside a limit, each with the
+# reason its result multiset needs a global sort. Empty: results are
+# unordered unless a key is top-N, and top-N sorts sit under a limit.
+RANGE_EXCHANGE_ALLOWED: dict[str, str] = {}
+
+_LIMITS = ("GlobalLimit", "CollectLimit", "TakeOrderedAndProject")
 
 
-def test_sort_barrier_preserves_rows(spark, sf_dir):
-    """sort_barrier only adds an exchange — row content is untouched."""
-    from pyspark.sql import functions as F
+def _range_exchanges_outside_limit(plan: str) -> list[str]:
+    """Lines of a physical plan tree holding a rangepartitioning exchange
+    with no limit node among their ancestors."""
+    import re
 
-    from pypers_spark.functions.barrier import sort_barrier
+    lines = plan.splitlines()
 
-    df = spark.range(100).select(
-        (F.col("id") % 7).alias("k"), F.col("id").alias("v")
-    )
-    got = sorted(sort_barrier(df, "k").orderBy("k", "v").collect())
-    want = sorted(df.orderBy("k", "v").collect())
-    assert got == want
+    def depth(line: str) -> int:
+        m = re.match(r"^[\s:+\-|]*", line)
+        return m.end() if m else 0
+
+    bad = []
+    for i, line in enumerate(lines):
+        if "rangepartitioning" not in line:
+            continue
+        d, under_limit = depth(line), False
+        for prev in reversed(lines[:i]):
+            if depth(prev) < d:
+                d = depth(prev)
+                if any(name in prev for name in _LIMITS):
+                    under_limit = True
+                    break
+        if not under_limit:
+            bad.append(line[depth(line):])
+    return bad
+
+
+def test_range_exchange_helper_sees_limits():
+    plan = "\n".join([
+        "GlobalLimit 10",
+        "+- Sort [k ASC], true",
+        "   +- Exchange rangepartitioning(k ASC, 32)",
+        "      +- Scan",
+    ])
+    assert _range_exchanges_outside_limit(plan) == []
+    bare = "Sort [k ASC], true\n+- Exchange rangepartitioning(k ASC, 32)\n   +- Scan"
+    assert _range_exchanges_outside_limit(bare) == ["Exchange rangepartitioning(k ASC, 32)"]
+
+
+@pytest.mark.parametrize("key", sorted(entry_mod.queries()))
+def test_no_range_exchange_outside_limit(spark, sf_dir, key):
+    """Ordering is a readout concern: a global sort (range-sampling job
+    plus range exchange) stays only where it changes the result
+    multiset, under a limit, or for an allow-listed key."""
+    if key in RANGE_EXCHANGE_ALLOWED:
+        pytest.skip(RANGE_EXCHANGE_ALLOWED[key])
+    assert _range_exchanges_outside_limit(plan_of(spark, sf_dir, key)) == [], key
 
 
 def test_cell_expansion_spread(spark, sf_dir):

@@ -75,7 +75,10 @@ def test_upsert_actions_partition_output(spark, sf_dir, qs):
 def test_validity_intervals_partition_time(spark, sf_dir, qs):
     """SCD2 rows per user are contiguous: valid_to of row i equals
     valid_from of row i+1; the last row is open-ended."""
-    rows = qs["op_validity_intervals"](spark, sf_dir).collect()
+    rows = sorted(
+        qs["op_validity_intervals"](spark, sf_dir).collect(),
+        key=lambda r: (r["user_id"], r["valid_from"]),
+    )
     by_user: dict = {}
     for r in rows:
         by_user.setdefault(r["user_id"], []).append(r)
@@ -109,7 +112,7 @@ def test_rolling_wau_at_least_dau(spark, sf_dir, qs):
 
 
 def test_date_spine_is_gapless(spark, sf_dir, qs):
-    rows = qs["op_date_spine"](spark, sf_dir).collect()
+    rows = sorted(qs["op_date_spine"](spark, sf_dir).collect(), key=lambda r: r["day"])
     days = [r["day"] for r in rows]
     for a, b in zip(days, days[1:]):
         assert (b - a).days == 1

@@ -248,7 +248,7 @@ def test_radius_join_deciles_within_radius(spark, sf_dir, qs):
     consistent; pair density grows with distance (ring area ~ r)."""
     from pypers_spark.operators.geo import RADIUS_KM
 
-    rows = qs["gs_radius_join"](spark, sf_dir).collect()
+    rows = sorted(qs["gs_radius_join"](spark, sf_dir).collect(), key=lambda r: r["dist_decile"])
     assert rows, "the synthetic box must contain pairs within the radius"
     for r in rows:
         assert 0 <= r["dist_decile"] <= 9
@@ -317,7 +317,7 @@ def test_pack_sequences_efficiency_bounds(spark, sf_dir, qs):
 
 def test_curriculum_stages_tile_corpus(spark, sf_dir, qs, tables):
     """Stages partition the corpus; score bands are ordered."""
-    rows = qs["txt_curriculum_stages"](spark, sf_dir).collect()
+    rows = sorted(qs["txt_curriculum_stages"](spark, sf_dir).collect(), key=lambda r: r["stage"])
     assert sum(r["n_docs"] for r in rows) == tables["documents"].count()
     for prev, cur in zip(rows, rows[1:]):
         assert prev["max_score"] <= cur["min_score"] + 1e-9
@@ -352,7 +352,8 @@ def test_batch_topk_per_query_invariants(spark, sf_dir, qs):
     from pypers_spark.operators.similarity import BATCH_TOP_K
 
     by_q = collections.defaultdict(list)
-    for r in qs["ann_batch_topk"](spark, sf_dir).collect():
+    collected = qs["ann_batch_topk"](spark, sf_dir).collect()
+    for r in sorted(collected, key=lambda r: (r["query_id"], r["rank"])):
         by_q[r["query_id"]].append(r)
     assert by_q
     for q, rows in by_q.items():
@@ -430,7 +431,7 @@ def test_dsr_export_covers_subject_tables(spark, sf_dir, qs, tables):
 
 
 def test_error_budget_monotone_burn(spark, sf_dir, qs):
-    rows = qs["ev_error_budget"](spark, sf_dir).collect()
+    rows = sorted(qs["ev_error_budget"](spark, sf_dir).collect(), key=lambda r: r["day"])
     assert rows
     burns = [r["budget_burned"] for r in rows]
     assert burns == sorted(burns)  # cumulative burn is monotone
@@ -440,7 +441,7 @@ def test_error_budget_monotone_burn(spark, sf_dir, qs):
 def test_benford_chi2_terms_consistent(spark, sf_dir, qs):
     """Digits 1-9 all present; shares sum to 1; chi2 terms nonnegative;
     the synthetic corpus deviates from Benford (that's the detection)."""
-    rows = qs["op_benford_check"](spark, sf_dir).collect()
+    rows = sorted(qs["op_benford_check"](spark, sf_dir).collect(), key=lambda r: r["d"])
     assert [r["d"] for r in rows] == list(range(1, 10))
     assert abs(sum(r["observed"] for r in rows) - 1.0) < 1e-3
     assert all(r["chi2_term"] >= 0 for r in rows)

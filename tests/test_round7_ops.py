@@ -106,7 +106,9 @@ def test_pps_sample_slot_counts_proportional_to_size(spark):
     from pypers_spark.operators.curation_extra import PPS_K, op_pps_sample
 
     rows = [(i, "x", "s", 1) for i in range(10)] + [(99, "x", "s", 90)]
-    out = op_pps_sample({"documents": _docs_df(spark, rows)}).collect()
+    out = sorted(
+        op_pps_sample({"documents": _docs_df(spark, rows)}).collect(), key=lambda r: r["slot"]
+    )
     assert len(out) == PPS_K
     assert [r["slot"] for r in out] == list(range(PPS_K))
     big = [r for r in out if r["doc_id"] == 99]
@@ -170,7 +172,7 @@ def test_histogram_equidepth_balance(tables):
         op_histogram_equidepth,
     )
 
-    rows = op_histogram_equidepth(tables).collect()
+    rows = sorted(op_histogram_equidepth(tables).collect(), key=lambda r: r["bucket"])
     assert [r["bucket"] for r in rows] == list(range(HEQ_B))
     counts = [r["n"] for r in rows]
     assert sum(counts) == tables["orders"].count()
@@ -186,7 +188,7 @@ def test_k_core_peel_monotone_and_converged(tables):
     point, not a truncated peel."""
     from pypers_spark.operators.graph import KCORE_ROUNDS, gr_k_core
 
-    rows = gr_k_core(tables).collect()
+    rows = sorted(gr_k_core(tables).collect(), key=lambda r: r["round"])
     assert len(rows) == KCORE_ROUNDS
     nodes = [r["n_nodes"] for r in rows]
     edges = [r["n_edges"] for r in rows]
@@ -222,7 +224,7 @@ def test_graph_search_beam_is_ranked_and_improves_on_entries(tables, spark):
     )
     from pypers_spark.functions.rounding import rnd
 
-    out = ann_graph_search(tables).collect()
+    out = sorted(ann_graph_search(tables).collect(), key=lambda r: (r["q_id"], r["rank"]))
     by_q: dict = {}
     for r in out:
         by_q.setdefault(r["q_id"], []).append(r)

@@ -174,7 +174,7 @@ def test_calibration_bins_partition_events(spark, sf_dir, tables):
     mean score sits inside its own bin bounds."""
     from pypers_spark.operators.events_extra import CAL_BINS, ev_calibration_bins
 
-    rows = ev_calibration_bins(tables).collect()
+    rows = sorted(ev_calibration_bins(tables).collect(), key=lambda r: r["bin"])
     assert [r["bin"] for r in rows] == list(range(CAL_BINS))
     assert sum(r["n"] for r in rows) == tables["events"].count()
     for r in rows:
@@ -726,7 +726,7 @@ def test_qte_matches_numpy_quantiles(spark, sf_dir, tables):
     by_v = {0: [], 1: []}
     for r in per_user:
         by_v[r["variant"]].append(r["m"])
-    rows = ev_qte(tables).collect()
+    rows = sorted(ev_qte(tables).collect(), key=lambda r: r["decile"])
     assert len(rows) == len(QTE_QS)
     for row, (q, a) in zip(rows, QTE_QS):
         qc = float(np.quantile(np.array(by_v[0]), q, method="linear"))

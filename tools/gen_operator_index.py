@@ -71,6 +71,13 @@ def main() -> None:
         'df = e.queries()["dd_minhash_lsh"](spark, "/root/testdata/sf0.01")',
         "```",
         "",
+        "Results are unordered: a key's DataFrame carries its rows in",
+        "whatever order the plan produces them, unless the key is top-N",
+        "(`orderBy(...).limit(n)`, planned as `TakeOrderedAndProject`),",
+        "where the order decides which rows are kept. Callers that display",
+        "or compare rows in order sort at readout, e.g.",
+        '`df.orderBy("doc_id").toPandas()` or `sorted(df.collect())`.',
+        "",
     ]
     covered = set()
     for prefix, title in FAMILIES:
